@@ -165,14 +165,15 @@ object SparkEntry {
     * the incremental-store rows probe. Built ONCE per source
     * fingerprint (the [[engineCachePath]] pattern): store construction
     * is ingest cost; the contract row measures the per-batch lookup. */
-  private[graft] def landedBandStore(s: SparkSession,
-      dir: String): graft.operators.BandStore = {
+  private[graft] def landedBandsStore(s: SparkSession,
+      dir: String): graft.operators.BatchStore = {
     val fp = sourceFingerprint(s"$dir/documents.parquet")
     val base = s"/tmp/graft_bandstore_${Integer.toHexString(dir.hashCode)}_" +
       java.lang.Long.toHexString(fp)
-    val store = graft.operators.BandStore.open(s, base)
+    val store = graft.operators.BatchStore.open(s, base,
+      graft.operators.BatchStore.Bands)
     if (store.nonEmpty) store
-    else graft.operators.BandStore.fromSignatures(s, base,
+    else graft.operators.BatchStore.fromSignatures(s, base,
       graft.operators.Dedup.minhashSignatures(
         s.read.parquet(s"$dir/documents.parquet")
           .filter(col("doc_id") % 3 === 0)
@@ -181,14 +182,15 @@ object SparkEntry {
   }
 
   /** The landed (doc_id % 3 = 0) CONTENT-HASH store for `dir` — the
-    * exact-dedup twin of [[landedBandStore]] (the BandStore is
+    * exact-dedup twin of [[landedBandsStore]] (the bands layout is
     * key-agnostic; here the membership key is the doc md5). */
   private[graft] def landedHashStore(s: SparkSession,
-      dir: String): graft.operators.BandStore = {
+      dir: String): graft.operators.BatchStore = {
     val fp = sourceFingerprint(s"$dir/documents.parquet")
     val base = s"/tmp/graft_hashstore_${Integer.toHexString(dir.hashCode)}_" +
       java.lang.Long.toHexString(fp)
-    val store = graft.operators.BandStore.open(s, base)
+    val store = graft.operators.BatchStore.open(s, base,
+      graft.operators.BatchStore.Bands)
     if (!store.nonEmpty)
       store.append(
         s.read.parquet(s"$dir/documents.parquet")
@@ -219,14 +221,14 @@ object SparkEntry {
       .getLong(0) + 1L) / 2L
 
   /** The landed semantic-dedup state for `dir`, built ONCE per source
-    * fingerprint (the [[landedBandStore]] pattern): a persisted kmeans
+    * fingerprint (the [[landedBandsStore]] pattern): a persisted kmeans
     * layout TRAINED on the landed id-prefix (frozen centroids — the
     * serving sidecar every batch assigns from) plus a
-    * [[graft.operators.ClusterVecStore]] holding the landed members'
+    * [[graft.operators.BatchStore.Vectors]] store holding the landed members'
     * `(bucket key, vec_id, fx)` rows, bootstrapped as batch 0 of the
     * incremental operator itself (all-seen landing from day one). */
   private[graft] def landedSemanticState(s: SparkSession, dir: String)
-      : (String, graft.operators.ClusterVecStore) = {
+      : (String, graft.operators.BatchStore) = {
     val fp = sourceFingerprint(s"$dir/embeddings.parquet")
     val suffix = s"${Integer.toHexString(dir.hashCode)}_" +
       java.lang.Long.toHexString(fp)
@@ -235,8 +237,8 @@ object SparkEntry {
       graft.operators.Clustering.writeKmeansIvfLayout(
         plantedEmbeddings(s, dir).filter(col("vec_id") < t), tmp)
     }
-    val store = graft.operators.ClusterVecStore.open(s,
-      s"/tmp/graft_vecstore_v1_$suffix")
+    val store = graft.operators.BatchStore.open(s,
+      s"/tmp/graft_vecstore_v1_$suffix", graft.operators.BatchStore.Vectors)
     if (!store.nonEmpty) {
       val (_, members) = graft.operators.Clustering
         .incrementalSemanticWithStore(
@@ -261,7 +263,7 @@ object SparkEntry {
     if (!java.nio.file.Files.exists(
         java.nio.file.Paths.get(seed, "batch=init"))) {
       graft.streaming.StreamOps.atomicBatchWrite(known, seed, "init")
-      graft.operators.BandStore.fromSignatures(s, s"$seed/_bands",
+      graft.operators.BatchStore.fromSignatures(s, s"$seed/_bands",
         s.read.parquet(s"$seed/batch=init"))
     }
     seed
@@ -277,7 +279,8 @@ object SparkEntry {
     val fp = sourceFingerprint(s"$dir/documents.parquet")
     val seed = s"/tmp/graft_imgst_seed_${Integer.toHexString(dir.hashCode)}_" +
       java.lang.Long.toHexString(fp)
-    val store = graft.operators.ClusterVecStore.open(s, seed)
+    val store = graft.operators.BatchStore.open(s, seed,
+      graft.operators.BatchStore.Vectors)
     if (!store.hasBatch("init")) {
       val (_, init) = graft.operators.Multimodal
         .incrementalImageDedupWithStore(
@@ -562,7 +565,8 @@ object SparkEntry {
       val landed = e.filter(col("vec_id") < split)
       val batch = e.filter(col("vec_id") >= split)
       val root = s"$tmp/root"
-      val store = graft.operators.ClusterVecStore.open(s, s"$tmp/store")
+      val store = graft.operators.BatchStore.open(s, s"$tmp/store",
+        graft.operators.BatchStore.Vectors)
       graft.operators.IvfVersions.init(landed, root)
       val (_, init) = graft.operators.Clustering
         .incrementalSemanticWithStore(landed,
@@ -641,7 +645,8 @@ object SparkEntry {
       val root = s"$tmp/root"
       graft.operators.IvfVersions.init(
         e.filter(col("vec_id") < split), root)
-      val store = graft.operators.ClusterVecStore.open(s, s"$tmp/store")
+      val store = graft.operators.BatchStore.open(s, s"$tmp/store",
+        graft.operators.BatchStore.Vectors)
       val (_, init) = graft.operators.Clustering
         .incrementalSemanticWithStore(e.filter(col("vec_id") < split),
           graft.operators.IvfVersions.currentDir(root), store, 1000L)
@@ -1424,7 +1429,7 @@ object SparkEntry {
 
     // ---- the exact incremental filter against the BUCKETED hash
     //      store: same drop rule as ext_dedup_incremental (same
-    //      oracle), landed side a prunable BandStore of content md5s —
+    //      oracle), landed side a prunable bands store of content md5s —
     //      membership never scans or shuffles the fingerprint table --
     "ext_dedup_incremental_exact_store" -> ((s, dir) =>
       graft.operators.Dedup.incrementalExactWithStore(
@@ -1483,13 +1488,13 @@ object SparkEntry {
 
     // ---- the incremental near-dup filter against the BUCKETED band
     // store (round 17): same drop rule as ext_dedup_incremental_minhash
-    // (same oracle SQL), but the landed side is a BandStore — the
+    // (same oracle SQL), but the landed side is a bands store — the
     // membership lookup prunes (bp partition filters + pushed In(band))
     // and feeds no exchange, so per-batch cost tracks the batch, not
     // the landed corpus. Store built in a scratch dir per run (build is
     // landed-band-sized; the plan shape is what this row pins).
     "ext_dedup_incremental_store" -> ((s, dir) => {
-      val store = landedBandStore(s, dir)
+      val store = landedBandsStore(s, dir)
       graft.operators.Dedup
         .incrementalMinhashWithStore(plantedDocs(s, dir), store)._1
     }),
@@ -1559,7 +1564,7 @@ object SparkEntry {
     }),
 
     // ---- INCREMENTAL perceptual dedup (round 19): the profile-dHash
-    //      rule against a LANDED ClusterVecStore (ck = Hamming band,
+    //      rule against a LANDED vectors store (ck = Hamming band,
     //      fx = [phash] — band membership makes a candidate, the
     //      landed hash verifies it). Landed = the %3 slice; batch =
     //      the rest + the tail-edit variants, which drop vs landed or
@@ -1575,14 +1580,14 @@ object SparkEntry {
       val batch = base.filter(col("doc_id") % 3 =!= 0)
         .unionAll(variants)
       // landed state = the fingerprint-cached seed store (r21 — the
-      // landedBandStore / landedSemanticState / streamImageSeed
+      // landedBandsStore / landedSemanticState / streamImageSeed
       // convention applied to the one incremental row still re-hashing
       // the landed corpus per run): store construction is ingest cost,
       // the contract row measures the per-batch lookup. READ-ONLY here
       // (the batch's members are never appended), so the shared cache
       // stays clean.
-      val store = graft.operators.ClusterVecStore.open(s,
-        streamImageSeed(s, dir))
+      val store = graft.operators.BatchStore.open(s,
+        streamImageSeed(s, dir), graft.operators.BatchStore.Vectors)
       graft.operators.Multimodal
         .incrementalImageDedupWithStore(batch, store)._1
     }),
@@ -1695,7 +1700,8 @@ object SparkEntry {
         // pointer publish + re-key as ONE store-write-locked unit
         // (r21 — the r20 ADVICE cutover race)
         cutover = graft.operators.Clustering.rekeyStoreOnCutover(
-          graft.operators.ClusterVecStore.open(s, s"$stateDir/vecs"),
+          graft.operators.BatchStore.open(s, s"$stateDir/vecs",
+            graft.operators.BatchStore.Vectors),
           root))
       graft.streaming.StreamOps.curateToFiles(s, dir,
         plantedEmb, root, stateDir, outDir,
@@ -1718,14 +1724,14 @@ object SparkEntry {
         .parquet(outDir)
         .select(lit("curated").as("kind"),
           col("doc_id").cast("string").as("k"))
-      val hashes = graft.operators.BandStore
-        .open(s, s"$stateDir/exact").read()
+      val hashes = graft.operators.BatchStore
+        .open(s, s"$stateDir/exact", graft.operators.BatchStore.Bands).read()
         .select(lit("hash").as("kind"), col("band").as("k"))
-      val bands = graft.operators.BandStore
-        .open(s, s"$stateDir/bands").read()
+      val bands = graft.operators.BatchStore
+        .open(s, s"$stateDir/bands", graft.operators.BatchStore.Bands).read()
         .select(lit("band").as("kind"), col("band").as("k"))
-      val members = graft.operators.ClusterVecStore
-        .open(s, s"$stateDir/vecs").read()
+      val members = graft.operators.BatchStore
+        .open(s, s"$stateDir/vecs", graft.operators.BatchStore.Vectors).read()
         .select(lit("member").as("kind"),
           col("vec_id").cast("string").as("k"))
       // ONE distinct over the union (r22, §2.4): `kind` disjoins the
@@ -1772,7 +1778,7 @@ object SparkEntry {
 
     // ---- INCREMENTAL semantic dedup (round 18): frozen centroids
     //      from the persisted kmeans layout trained on the landed
-    //      id-prefix; the landed members live in a ClusterVecStore
+    //      id-prefix; the landed members live in a vectors store
     //      (bp partition filters + pushed In(ck), zero landed-side
     //      exchanges), so a batch is deduped against the corpus
     //      without rescanning it — batch-split ≡ one-shot pinned by
@@ -1806,7 +1812,8 @@ object SparkEntry {
       graft.operators.Clustering.incrementalSemanticWithStore(
         e.filter(col("vec_id") >= split),
         graft.operators.IvfVersions.currentDir(root),
-        graft.operators.ClusterVecStore.open(s, storeDir), 1000L)._1
+        graft.operators.BatchStore.open(s, storeDir,
+          graft.operators.BatchStore.Vectors), 1000L)._1
     }),
 
     // ---- SEMANTIC-MIXTURE rebalance (round 18): the cluster twin of
@@ -1905,7 +1912,8 @@ object SparkEntry {
         // (r21 — the r20 ADVICE cutover race): a concurrent batch can
         // never resolve the new layout against the old-keyed store
         cutover = graft.operators.Clustering.rekeyStoreOnCutover(
-          graft.operators.ClusterVecStore.open(s, storeDir), root))
+          graft.operators.BatchStore.open(s, storeDir,
+            graft.operators.BatchStore.Vectors), root))
       graft.streaming.StreamOps.incrementalSemanticToFiles(s, inDir,
         root, e.filter(col("vec_id") < split), storeDir,
         graft.core.Smoltable.scratchDir("graft_ssrt_out_"),

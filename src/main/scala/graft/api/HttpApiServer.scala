@@ -62,13 +62,26 @@ final class HttpApiServer(api: JsonApi, port: Int = 9876,
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
   server.createContext("/", new Router)
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+
+  /** Request workers, named `graft-http-<n>`. Non-daemon, so [[stop]]
+    * must shut them down or a JVM that served HTTP never exits. */
+  private val pool = java.util.concurrent.Executors.newFixedThreadPool(8,
+    new java.util.concurrent.ThreadFactory {
+      private val base = java.util.concurrent.Executors.defaultThreadFactory()
+      private val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      def newThread(r: Runnable): Thread = {
+        val t = base.newThread(r)
+        t.setName(s"graft-http-${n.incrementAndGet()}")
+        t
+      }
+    })
+  server.setExecutor(pool)
 
   def boundPort: Int = server.getAddress.getPort
 
   def start(): Int = { server.start(); boundPort }
 
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = { server.stop(0); pool.shutdown() }
 
   private final class Router extends HttpHandler {
     override def handle(ex: HttpExchange): Unit = {

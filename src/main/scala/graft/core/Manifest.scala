@@ -168,7 +168,7 @@ object TableManifest {
   * finalization, which matters for the per-minute worker sweeps and
   * per-request `listTables` calls of a long-lived server.
   */
-private[core] object PathIO {
+private[graft] object PathIO {
   def withStream[A, T](s: java.util.stream.Stream[A])(
       f: Iterator[A] => T): T =
     try f(s.iterator().asScala) finally s.close()

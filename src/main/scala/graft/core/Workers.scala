@@ -52,7 +52,7 @@ final class Workers(spark: SparkSession, catalog: Catalog,
 
   /** Registered auxiliary maintenance tasks (round 18): operator-layer
     * state that needs the same background cadence as table GC — e.g. a
-    * dedup [[graft.operators.BandStore]]'s expire+compact pass
+    * dedup [[graft.operators.BatchStore]]'s expire+compact pass
     * (`store.maintenanceTask(...)`) — without the core layer depending
     * on the operator layer. Registration is idempotent per name
     * (re-register to replace). Tasks run inside the GC worker's sweep,

@@ -592,10 +592,11 @@ object Clustering {
     * against the LANDED corpus, without ever rescanning it. Centroids
     * come FROZEN from a persisted kmeans layout's sidecar
     * ([[writeKmeansIvfLayout]] — no retraining per batch); the landed
-    * state is a [[ClusterVecStore]] of `(bucket key, vec_id, fx)` rows,
-    * so the membership+distance question touches only the batch's own
-    * `(c1, c2)` buckets (partition filters + pushed `In(ck)`, zero
-    * landed-side exchanges — the [[BandStore]] lookup tiers).
+    * state is a [[BatchStore.Vectors]] store of `(bucket key, vec_id,
+    * fx)` rows, so the membership+distance question touches only the
+    * batch's own `(c1, c2)` buckets (partition filters + pushed
+    * `In(ck)`, zero landed-side exchanges — the
+    * [[BatchStore.prunedLookup]] tiers).
     *
     * Drop rule (the [[semanticDedup]] rule split across the landing
     * boundary): a batch doc drops when some landed vector in its bucket
@@ -623,11 +624,11 @@ object Clustering {
     * landed (the store lookup is materialized, so the returned
     * survivors frame stays safe to consume lazily either way). */
   def incrementalSemanticWithStore(newEmb: DataFrame, layoutDir: String,
-      store: ClusterVecStore, dist2Threshold: Long,
+      store: BatchStore, dist2Threshold: Long,
       maxBucketSize: Int = DefaultMaxBucketSize,
       /** Exclude `batch=<tag>` from the landed lookup — a composed
         * streaming replay's pre-batch-state restore
-        * ([[BandStore.prunedLookup]]'s round-19 contract). */
+        * ([[BatchStore.prunedLookup]]'s round-19 contract). */
       excludeTag: Option[String] = None)
       : (DataFrame, DataFrame) = {
     require(dist2Threshold >= 0 && maxBucketSize > 0)
@@ -679,7 +680,7 @@ object Clustering {
     (survivors, newMembers)
   }
 
-  /** RE-KEY a landed [[ClusterVecStore]] under a (new) layout's
+  /** RE-KEY a landed [[BatchStore.Vectors]] store under a (new) layout's
     * centroids (round 19 — the missing half of the drift→retrain
     * story): the store's bucket key `ck = "c1_c2"` is a FUNCTION OF
     * THE CENTROIDS, so an [[IvfVersions]] cutover strands every landed
@@ -689,7 +690,7 @@ object Clustering {
     * recomputes the top-2 assignment under `layoutDir`'s sidecar (the
     * same [[graft.functions.NearestCentroids]] kernel every lookup
     * uses), and commits the re-keyed member set as one crash-safe
-    * rewrite ([[ClusterVecStore.replaceAll]] — old keys live until the
+    * rewrite ([[BatchStore.replaceAllWith]] — old keys live until the
     * new set is committed). Call it from the retrain hook:
     * {{{ onRetrain = _ => Clustering.rekeyStore(store, IvfVersions.currentDir(root)) }}}
     * Cost: one store scan + one k·d-row broadcast assignment + one
@@ -698,14 +699,13 @@ object Clustering {
     * folded away.
     *
     * The landed frame is derived UNDER the store's write lock
-    * ([[ClusterVecStore.replaceAllWith]], round 20): planning it
-    * outside would pin the dir list before the lock, and an append
-    * landing in that window (the advertised deployment — the retrain
-    * task fires from the background workers while the pipeline appends
-    * per batch) would have its dir deleted while its rows are absent
-    * from the re-keyed set. Appends hold the read lock, so the
+    * (round 20): planning it outside would pin the dir list before
+    * the lock, and an append landing in that window (the advertised
+    * deployment — the retrain task fires from the background workers
+    * while the pipeline appends per batch) would have its dir deleted
+    * while its rows are absent from the re-keyed set. Appends hold the read lock, so the
     * list-rekey-commit-delete span sees a frozen member set. */
-  def rekeyStore(store: ClusterVecStore, layoutDir: String): Int = {
+  def rekeyStore(store: BatchStore, layoutDir: String): Int = {
     val cents = readKmeansCentroids(layoutDir)
     store.replaceAllWith { landedAll =>
       val landed = landedAll
@@ -725,7 +725,7 @@ object Clustering {
     * across resolve→assign→append can never observe the new pointer
     * against the old keys (or vice versa). The store's write lock is
     * reentrant for the rewrite inside. */
-  def rekeyStoreOnCutover(store: ClusterVecStore,
+  def rekeyStoreOnCutover(store: BatchStore,
       root: String): (Long, () => Unit) => Unit =
     (_, swap) => StoreState.withWrite(store.dir) {
       swap()

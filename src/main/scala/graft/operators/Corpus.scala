@@ -597,13 +597,14 @@ object Corpus {
       // builder the loser.
       if (!new java.io.File(tmp).renameTo(new java.io.File(stagingDir))) {
         if (!new java.io.File(stagingDir, "_SUCCESS").exists()) {
-          deleteTree(java.nio.file.Paths.get(stagingDir))
+          graft.core.PathIO.deleteRecursively(
+            java.nio.file.Paths.get(stagingDir))
           new java.io.File(tmp).renameTo(new java.io.File(stagingDir))
         }
         require(new java.io.File(stagingDir, "_SUCCESS").exists(),
           s"staging rename $tmp -> $stagingDir failed and the " +
             "destination is not a complete table (no _SUCCESS)")
-        deleteTree(java.nio.file.Paths.get(tmp))
+        graft.core.PathIO.deleteRecursively(java.nio.file.Paths.get(tmp))
       }
     }
     prepPipeline(spark.read.parquet(stagingDir), chunkTokens, overlap)
@@ -625,13 +626,5 @@ object Corpus {
     docs.select(col(idCol).as("doc_id"),
       when(h < t1, lit("train")).when(h < t2, lit("val"))
         .otherwise(lit("test")).as("split"))
-  }
-
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    if (!java.nio.file.Files.exists(p)) return
-    import scala.jdk.CollectionConverters._
-    val st = java.nio.file.Files.walk(p)
-    val all = try st.iterator().asScala.toSeq finally st.close()
-    all.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
   }
 }

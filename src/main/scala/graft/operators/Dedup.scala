@@ -63,11 +63,11 @@ object Dedup {
       .select(col("doc_id"), col("h"))
   }
 
-  /** [[incrementalExact]] against a [[BandStore]] holding the landed
-    * CONTENT-HASH set — the store is key-agnostic (it lands membership
-    * strings; here the "band" is the doc's md5), so the exact
-    * fingerprint table gets the same prunable layout as the minhash
-    * band store: per-batch membership is the tiered pruned lookup
+  /** [[incrementalExact]] against a [[BatchStore.Bands]] store holding
+    * the landed CONTENT-HASH set — the layout is key-agnostic (it lands
+    * membership strings; here the "band" is the doc's md5), so the
+    * exact fingerprint table gets the same prunable layout as the
+    * minhash band store: per-batch membership is the tiered pruned lookup
     * (pushed `In` + partition filters / broadcast semi-join — zero
     * landed-side exchanges) instead of a full scan + re-distinct of
     * the fingerprint table.
@@ -80,11 +80,11 @@ object Dedup {
     * [[incrementalExact]]'s maintenance doc states). The caller lands
     * `newHashes` via `store.append(newHashes, tag)` after committing
     * survivors. */
-  def incrementalExactWithStore(newDocs: DataFrame, store: BandStore,
+  def incrementalExactWithStore(newDocs: DataFrame, store: BatchStore,
       idCol: String = "doc_id", textCol: String = "text",
       /** Exclude `batch=<tag>` from the landed lookup — a composed
         * streaming replay's pre-batch-state restore
-        * ([[BandStore.prunedLookup]]'s round-19 contract). */
+        * ([[BatchStore.prunedLookup]]'s round-19 contract). */
       excludeTag: Option[String] = None)
       : (DataFrame, DataFrame) = {
     // batch hashes MATERIALIZED once (r21, the minhash twin's
@@ -94,7 +94,7 @@ object Dedup {
       .select(col(idCol).as("doc_id"), md5(col(textCol)).as("h"))
       .groupBy("h").agg(min(col("doc_id")).as("doc_id"))
       .localCheckpoint(true)
-    val known = store.knownAmong(batch.select(col("h").as("band")),
+    val known = store.landedAmong(batch.select(col("h").as("band")),
       excludeTag)
     val survivors = batch
       .join(known.select(col("band").as("h")), Seq("h"), "left_anti")
@@ -150,18 +150,18 @@ object Dedup {
     batchSigs.join(dropIds, Seq("doc_id"), "left_anti")
   }
 
-  /** [[incrementalMinhash]] against a [[BandStore]] — identical
+  /** [[incrementalMinhash]] against a [[BatchStore.Bands]] store — identical
     * semantics (same drop rule, same survivor signatures; pinned by an
     * OperatorsSpec differential), but the landed-side membership check
     * is the store's PRUNED lookup instead of a full scan + re-distinct
     * of the landed signature table. Per batch the landed side
     * contributes `PartitionFilters` + pushed-`In` row-group pruning and
-    * ZERO exchanges ([[BandStore]] doc) — per-batch cost tracks the
+    * ZERO exchanges ([[BatchStore]] doc) — per-batch cost tracks the
     * batch, not the corpus-ever-seen.
     *
     * Returns `(survivors, newBands)`: survivors with their signatures
     * (safe to consume lazily — the membership result is materialized
-    * inside `knownAmong`, so a later store append cannot leak into this
+    * inside `landedAmong`, so a later store append cannot leak into this
     * plan), and the batch's NOT-yet-landed distinct bands, covering ALL
     * batch docs (the all-seen landing contract — see
     * [[incrementalMinhash]]'s doc for why survivors-only re-admits
@@ -169,7 +169,7 @@ object Dedup {
     * `store.append(newBands, tag)` AFTER committing survivors — that
     * order keeps a foreachBatch retry from seeing the batch's own bands
     * as landed and dropping everything. */
-  def incrementalMinhashWithStore(newDocs: DataFrame, store: BandStore,
+  def incrementalMinhashWithStore(newDocs: DataFrame, store: BatchStore,
       shingleLen: Int = 8, seeds: Seq[Long] = DefaultSeeds,
       rowsPerBand: Int = 2, idCol: String = "doc_id",
       textCol: String = "text",
@@ -195,13 +195,13 @@ object Dedup {
     * and the landing — previously the landing re-ran the kernel over
     * the batch text. `batchSigs` must be materialized (checkpointed /
     * landed) or the lookup-then-append ordering contract is lost. */
-  def incrementalMinhashFromSigs(batchSigs: DataFrame, store: BandStore,
+  def incrementalMinhashFromSigs(batchSigs: DataFrame, store: BatchStore,
       rowsPerBand: Int = 2,
       excludeTag: Option[String] = None): (DataFrame, DataFrame) = {
     val bBands = bandRows(batchSigs, rowsPerBand)
     val bandStats = bBands.groupBy("band")
       .agg(min(col("doc_id")).as("min_id"))
-    val known = store.knownAmong(bandStats.select("band"), excludeTag)
+    val known = store.landedAmong(bandStats.select("band"), excludeTag)
       .withColumn("known", lit(1))
     val stats2 = bandStats.join(known, Seq("band"), "left")
     val dropIds = bBands.join(stats2, Seq("band"))
@@ -293,7 +293,7 @@ object Dedup {
   /** Exploded (doc_id, band) rows — one band key per signature band. A
     * single explode over an array of band keys; a union of per-band selects
     * would re-execute the whole signature pipeline once per band.
-    * Public because [[BandStore]] and the streaming twin derive landed
+    * Public because [[BatchStore]] and the streaming twin derive landed
     * band sets with the SAME banding (one definition of "band").
     */
   def bandRows(signatures: DataFrame, rowsPerBand: Int): DataFrame = {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.DataFrame
 
@@ -133,7 +133,8 @@ object IvfVersions {
       // one-generation grace: keep v=prev for in-flight probes, delete
       // everything older (and any stale build debris below prev)
       listVersions(root).filter(_ < prev)
-        .foreach(v => deleteTree(Paths.get(versionDir(root, v))))
+        .foreach(v => graft.core.PathIO.deleteRecursively(
+          Paths.get(versionDir(root, v))))
       next
     }
 
@@ -209,13 +210,6 @@ object IvfVersions {
     try s.iterator().asScala.toSeq
       .map(_.getFileName.toString)
       .collect { case v if v.startsWith("v=") => v.stripPrefix("v=").toLong }
-    finally s.close()
-  }
-
-  private def deleteTree(p: Path): Unit = {
-    if (!Files.exists(p)) return
-    val s = Files.walk(p)
-    try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
     finally s.close()
   }
 }

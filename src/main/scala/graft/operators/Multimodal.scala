@@ -489,7 +489,7 @@ object Multimodal {
     * tracks true near-dups plus the 2^-15-rate random band
     * collisions, not corpus². Landed-store composable: the hashes are
     * single-long rows, so an incremental pipeline lands them in a
-    * [[BandStore]]-shaped table keyed by band value exactly like the
+    * [[BatchStore.Bands]]-shaped table keyed by band value exactly like the
     * minhash bands.
     *
     * HAMMING-0 CLIQUE COLLAPSE (round 20): real crawls are
@@ -599,7 +599,7 @@ object Multimodal {
   private val WithinCliqueSalt: Int = 64
 
   /** INCREMENTAL perceptual dedup — [[imageNearDupPairs]]'s rule in the
-    * continuous-ingest shape, against a LANDED [[ClusterVecStore]]
+    * continuous-ingest shape, against a LANDED [[BatchStore.Vectors]] store
     * (round 19): a new batch of binary payloads is near-dup-filtered
     * (a) within itself and (b) against every image ever landed, without
     * rescanning the corpus. The store reuses the per-cluster vector
@@ -620,7 +620,7 @@ object Multimodal {
     * `(doc_id, phash)`, and the batch's full member set for the caller
     * to land via `store.append(newMembers, tag)` AFTER committing
     * survivors. `excludeTag` is the composed-streaming replay contract
-    * ([[BandStore.prunedLookup]], round 19).
+    * ([[BatchStore.prunedLookup]], round 19).
     *
     * Scale shape: per batch, one decode pass (batch-sized,
     * checkpointed once), a pruned store lookup over ≤ 4·(distinct
@@ -636,7 +636,7 @@ object Multimodal {
     * smaller still), and every non-rep member drops against its own
     * rep at Hamming 0. Drop set unchanged. */
   def incrementalImageDedupWithStore(newDocs: DataFrame,
-      store: ClusterVecStore, maxHamming: Int = 3,
+      store: BatchStore, maxHamming: Int = 3,
       excludeTag: Option[String] = None): (DataFrame, DataFrame) = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"banding guarantees recall only to Hamming 3: $maxHamming")

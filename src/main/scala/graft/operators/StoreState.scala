@@ -8,7 +8,7 @@ import java.util.concurrent.locks.ReentrantReadWriteLock
 import scala.jdk.CollectionConverters._
 
 /** Shared per-directory coordination for the landed dedup-state stores
-  * ([[BandStore]], [[ClusterVecStore]]) — two small mechanisms, both
+  * ([[BatchStore]], both layouts) — two small mechanisms, both
   * round-19 hardening of the r18 lifecycle work:
   *
   * '''1. A read/write lock per store directory.''' A membership lookup

@@ -412,7 +412,7 @@ object StreamOps {
     * planting) to each batch before filtering; production passes
     * identity.
     *
-    * Membership state is a [[graft.operators.BandStore]] at
+    * Membership state is a [[graft.operators.BatchStore]] at
     * `sigDir/_bands` (hidden from `sigDir`'s own parquet reads): the
     * per-batch landed-side check is the store's PRUNED lookup
     * (partition + row-group pruning, zero landed-side exchanges)
@@ -459,7 +459,7 @@ object StreamOps {
       StructField("source", StringType),
       StructField("n_chars", LongType)))
     atomicBatchWrite(knownSigs, sigDir, "init")
-    val store = graft.operators.BandStore.fromSignatures(
+    val store = graft.operators.BatchStore.fromSignatures(
       s, s"$sigDir/_bands", s.read.parquet(s"$sigDir/batch=init"))
     val q = streamSource(s, dir, "documents", docSchema,
         maxFilesPerTrigger
@@ -493,7 +493,7 @@ object StreamOps {
     finally q.stop()
     // explicit schema: a run whose every batch dedups to ZERO
     // survivors leaves only data-less batch= dirs, which would wedge
-    // schema inference (the BandStore.read precedent)
+    // schema inference (the BatchStore.read precedent)
     val sigFields = StructField("doc_id", LongType) +:
       graft.operators.Dedup.DefaultSeeds.indices.map(i =>
         StructField(s"m${i + 1}", LongType))
@@ -509,7 +509,7 @@ object StreamOps {
     * against the landed corpus via `foreachBatch`. Centroids come
     * FROZEN from the persisted kmeans layout at `layoutDir` (no
     * per-batch retraining); the landed state is a
-    * [[graft.operators.ClusterVecStore]] at `storeDir`, seeded once
+    * [[graft.operators.BatchStore.Vectors]] store at `storeDir`, seeded once
     * from `landedEmb` as `batch=init` (skipped when already landed —
     * the restart path), so per-batch work touches only the batch's own
     * `(c1, c2)` buckets — never the corpus.
@@ -557,7 +557,8 @@ object StreamOps {
       StructField("embedding", org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType)),
       StructField("label", org.apache.spark.sql.types.IntegerType)))
-    val store = graft.operators.ClusterVecStore.open(s, storeDir)
+    val store = graft.operators.BatchStore.open(s, storeDir,
+      graft.operators.BatchStore.Vectors)
     if (!store.hasBatch("init"))
       graft.operators.StoreState.withRead(storeDir) {
         val (_, initMembers) = graft.operators.Clustering
@@ -597,7 +598,7 @@ object StreamOps {
     try q.processAllAvailable()
     finally q.stop()
     // explicit schema: an all-duplicate run leaves only data-less
-    // batch= dirs that would wedge inference (the BandStore precedent)
+    // batch= dirs that would wedge inference (the BatchStore precedent)
     s.read
       .schema(StructType(Seq(
         StructField("vec_id", LongType),
@@ -613,7 +614,7 @@ object StreamOps {
     * semantic, and perceptual each now run batch-incremental AND
     * exactly-once streaming). Per micro-batch the document payloads
     * are profile-dHashed and near-dup-filtered against the landed
-    * hash-carrying [[graft.operators.ClusterVecStore]]; survivors
+    * hash-carrying [[graft.operators.BatchStore.Vectors]] store; survivors
     * commit first (`batch=<id>` temp + ATOMIC_MOVE), the ALL-SEEN
     * member set lands after — the [[incrementalMinhashToFiles]]
     * replay contract verbatim, with the store lookup excluding the
@@ -635,7 +636,8 @@ object StreamOps {
       StructField("lang", StringType),
       StructField("source", StringType),
       StructField("n_chars", LongType)))
-    val store = graft.operators.ClusterVecStore.open(s, storeDir)
+    val store = graft.operators.BatchStore.open(s, storeDir,
+      graft.operators.BatchStore.Vectors)
     if (!store.hasBatch("init")) {
       val (_, init) = graft.operators.Multimodal
         .incrementalImageDedupWithStore(landedPayloads, store, maxHamming)
@@ -668,7 +670,7 @@ object StreamOps {
     try q.processAllAvailable()
     finally q.stop()
     // explicit schema: an all-duplicate run leaves only data-less
-    // batch= dirs that would wedge inference (the BandStore precedent)
+    // batch= dirs that would wedge inference (the BatchStore precedent)
     s.read
       .schema(StructType(Seq(
         StructField("doc_id", LongType),
@@ -684,14 +686,14 @@ object StreamOps {
     *  1. QUALITY GATE + PII REDACTION (stateless one-pass kernels —
     *     from here on `text` IS the redacted text, the prepPipelineV2
     *     contract);
-    *  2. EXACT dedup against the landed content-hash [[graft.operators.BandStore]]
+    *  2. EXACT dedup against the landed content-hash [[graft.operators.BatchStore]]
     *     ([[graft.operators.Dedup.incrementalExactWithStore]]);
     *  3. MINHASH near-dup dedup against the landed band store
     *     ([[graft.operators.Dedup.incrementalMinhashWithStore]],
     *     all-seen landing);
     *  4. SEMANTIC dedup of the survivors' embeddings (static
     *     `embeddings` side, `vec_id = doc_id`) against the landed
-    *     [[graft.operators.ClusterVecStore]] with FROZEN centroids
+    *     [[graft.operators.BatchStore.Vectors]] store with FROZEN centroids
     *     ([[graft.operators.Clustering.incrementalSemanticWithStore]]);
     *  5. survivors land as `(doc_id, lang, n_tokens)` batch dirs; the
     *     returned frame PACKS the landed curated table
@@ -754,16 +756,16 @@ object StreamOps {
       maintainAtBatches: Int = 0,
       retainBatches: Option[Int] = None,
       afterBatch: Long => Unit = _ => ()): DataFrame = {
-    import graft.operators.{BandStore, ClusterVecStore, Clustering, Corpus, Dedup, TextAnalysis}
+    import graft.operators.{BatchStore, Clustering, Corpus, Dedup, TextAnalysis}
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("text", StringType),
       StructField("lang", StringType),
       StructField("source", StringType),
       StructField("n_chars", LongType)))
-    val exact = BandStore.open(s, s"$stateDir/exact")
-    val bandSt = BandStore.open(s, s"$stateDir/bands")
-    val vecSt = ClusterVecStore.open(s, s"$stateDir/vecs")
+    val exact = BatchStore.open(s, s"$stateDir/exact", BatchStore.Bands)
+    val bandSt = BatchStore.open(s, s"$stateDir/bands", BatchStore.Bands)
+    val vecSt = BatchStore.open(s, s"$stateDir/vecs", BatchStore.Vectors)
     val embProj = embeddings.select(col("vec_id"), col("embedding"))
     // fixture/computed frames materialize once; file-backed tables
     // stay lazy and re-plan as a pruned per-batch scan (doc above)
@@ -880,7 +882,7 @@ object StreamOps {
     try q.processAllAvailable()
     finally q.stop()
     // explicit schema: an all-duplicate run leaves only data-less
-    // batch= dirs that would wedge inference (the BandStore precedent)
+    // batch= dirs that would wedge inference (the BatchStore precedent)
     val curated = s.read
       .schema(StructType(Seq(
         StructField("doc_id", LongType),
@@ -906,9 +908,10 @@ object StreamOps {
     * CALLER CONTRACT: side tasks must not need a lock the calling
     * thread already holds — a helper thread re-acquiring a read lock
     * can queue behind a waiting writer and deadlock; keep such work in
-    * `main`. The first failure (either side) propagates after all
-    * complete. */
-  private def overlapped[T](s: SparkSession,
+    * `main`. After all complete, main's failure propagates (else the
+    * first side task's), carrying every other side failure as a
+    * suppressed exception — no concurrent error is dropped. */
+  private[graft] def overlapped[T](s: SparkSession,
       side: Seq[(String, () => Unit)])(main: => T): T = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, side.size))
@@ -924,17 +927,19 @@ object StreamOps {
       val r = try Some(main) catch {
         case e: Throwable => mainErr = e; None
       }
-      var sideErr: Throwable = null
-      futs.foreach { fu =>
-        try fu.get() catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (sideErr == null) sideErr = e.getCause
-          case e: Throwable => if (sideErr == null) sideErr = e
+      val sideErrs = futs.flatMap { fu =>
+        try { fu.get(); None } catch {
+          case e: java.util.concurrent.ExecutionException => Some(e.getCause)
+          case e: Throwable => Some(e)
         }
       }
-      if (mainErr != null) throw mainErr
-      if (sideErr != null) throw sideErr
-      r.get
+      (Option(mainErr) ++ sideErrs).toList match {
+        case first :: rest =>
+          // addSuppressed rejects self-suppression (one shared error)
+          rest.filterNot(_ eq first).foreach(first.addSuppressed)
+          throw first
+        case Nil => r.get
+      }
     } finally pool.shutdown()
   }
 
@@ -998,7 +1003,7 @@ object StreamOps {
     * to a hidden temp dir, ATOMIC_MOVE into place, skip (returning
     * false, computing nothing) when the target already exists — the
     * idempotent-replay primitive shared by the incremental-dedup sinks
-    * (same commit discipline as [[graft.operators.BandStore.append]]). */
+    * (same commit discipline as [[graft.operators.BatchStore.append]]). */
   private[graft] def atomicBatchWrite(df: DataFrame, baseDir: String,
       tag: String): Boolean = {
     import java.nio.file.{Files, Paths, StandardCopyOption}

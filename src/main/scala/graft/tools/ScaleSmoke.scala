@@ -254,7 +254,7 @@ object ScaleSmoke {
     // lookup keeps it flat (store build is one-time, cached per dir
     // like the engine tables — ingest cost, not query cost)
     "ext_dedup_incstore_fixedbatch" -> ((s, dir) => {
-      val store = graft.SparkEntry.landedBandStore(s, dir)
+      val store = graft.SparkEntry.landedBandsStore(s, dir)
       val copy0 = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
         .filter(col("doc_id") < 100000000L)
@@ -272,7 +272,7 @@ object ScaleSmoke {
     // instead of merely shrinking the file count. Store build is
     // one-time ingest cost, cached per (dir, fingerprint)
     "ext_dedup_incstore_maintained" -> ((s, dir) => {
-      val store = maintainedBandStore(s, dir)
+      val store = maintainedBandsStore(s, dir)
       val copy0 = s.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), col("text"))
         .filter(col("doc_id") < 100000000L)
@@ -323,17 +323,18 @@ object ScaleSmoke {
     * run (the verbs mutate). */
   /** The fragmented-then-maintained band store for
     * `ext_dedup_incstore_maintained`: the SAME landed slice as
-    * [[graft.SparkEntry.landedBandStore]] (docs with `doc_id % 3 = 0`),
+    * [[graft.SparkEntry.landedBandsStore]] (docs with `doc_id % 3 = 0`),
     * but landed as 50 id-sliced `batch=` appends and then compacted by
     * the scheduled maintenance task — identical membership, different
     * on-disk history. Built once per (dir, source fingerprint). */
-  private def maintainedBandStore(s: SparkSession,
-      dir: String): graft.operators.BandStore = {
+  private def maintainedBandsStore(s: SparkSession,
+      dir: String): graft.operators.BatchStore = {
     val src = new java.io.File(s"$dir/documents.parquet")
     val fp = java.lang.Long.toHexString(31L * src.length + src.lastModified)
     val base = s"/tmp/graft_bandstore_maint_" +
       s"${Integer.toHexString(dir.hashCode)}_$fp"
-    val store = graft.operators.BandStore.open(s, base)
+    val store = graft.operators.BatchStore.open(s, base,
+      graft.operators.BatchStore.Bands)
     if (!store.nonEmpty) {
       val landed = s.read.parquet(s"$dir/documents.parquet")
         .filter(col("doc_id") % 3 === 0)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * `private[sql]` on the classic implementation: operators that need a
   * conf-scoped session (an isolated copy of the current session state
   * whose conf changes do NOT leak back — e.g. the
-  * [[graft.operators.BandStore]] tier-1 lookup raising the parquet
+  * [[graft.operators.BatchStore]] lookup raising the parquet
   * In-pushdown threshold for exactly one read path) clone through here.
   */
 object SessionClone {

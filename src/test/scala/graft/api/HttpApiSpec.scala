@@ -367,4 +367,29 @@ class HttpApiSpec extends SparkSuite {
       } finally srv.stop()
     }
   }
+
+  test("stop() ends every graft-http- worker thread within 5 s") {
+    withTempDir { dir =>
+      val srv = new HttpApiServer(new JsonApi(new Catalog(dir.toString),
+        spark), port = 0)
+      val port = srv.start()
+      def httpThreads(): Seq[String] = {
+        import scala.jdk.CollectionConverters._
+        Thread.getAllStackTraces.keySet.asScala.toSeq
+          .filter(t => t.isAlive && t.getName.startsWith("graft-http-"))
+          .map(_.getName)
+      }
+      try {
+        // a few requests so the pool has started worker threads
+        for (_ <- 0 until 4)
+          assert(send("GET", s"http://localhost:$port/v1/table")._1 == 200)
+        assert(httpThreads().nonEmpty, "requests ran on no graft-http- thread")
+      } finally srv.stop()
+      val deadline = System.nanoTime() + 5000000000L
+      while (httpThreads().nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(httpThreads().isEmpty,
+        s"worker threads outlived stop(): ${httpThreads()}")
+    }
+  }
 }

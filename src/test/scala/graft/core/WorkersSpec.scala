@@ -109,7 +109,8 @@ class WorkersSpec extends SparkSuite {
     import org.apache.spark.sql.functions._
     withTempDir { dir =>
       val cat = new Catalog(s"$dir/cat")
-      val store = graft.operators.BandStore.open(spark, s"$dir/bands")
+      val store = graft.operators.BatchStore.open(spark, s"$dir/bands",
+        graft.operators.BatchStore.Bands)
       // 50 tiny appends — the fragmentation a per-micro-batch dedup
       // store accumulates (one file per touched bucket per batch)
       for (i <- 0 until 50) {

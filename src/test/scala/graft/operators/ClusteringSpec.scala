@@ -258,7 +258,7 @@ class ClusteringSpec extends SparkSuite {
         .semanticDedupFrozen(planted, cents, dist2Threshold = 1000L)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       // three id-ordered batches through a fresh store, all-seen landing
-      val store = ClusterVecStore.open(spark, s"$tmp/vecs")
+      val store = BatchStore.open(spark, s"$tmp/vecs", BatchStore.Vectors)
       val bounds = Seq(
         col("vec_id") < maxId / 3,
         col("vec_id") >= maxId / 3 && col("vec_id") < 1000000L,
@@ -349,7 +349,7 @@ class ClusteringSpec extends SparkSuite {
     }
   }
 
-  test("ClusterVecStore retention: expiring landed batches re-admits " +
+  test("Vectors-store retention: expiring landed batches re-admits " +
       "their near-dups BY DESIGN (the bounded-state horizon), and the " +
       "maintenance task composes expire + compact") {
     import org.apache.spark.sql.functions.col
@@ -359,7 +359,7 @@ class ClusteringSpec extends SparkSuite {
       val layout = s"$tmp/semk"
       Clustering.writeKmeansIvfLayout(
         emb.filter(col("vec_id") < 100), layout, stride = 20L)
-      val store = ClusterVecStore.open(spark, s"$tmp/vecs")
+      val store = BatchStore.open(spark, s"$tmp/vecs", BatchStore.Vectors)
       val batch = emb.filter(col("vec_id") >= 100 && col("vec_id") < 300)
       def run(): Set[Long] = Clustering.incrementalSemanticWithStore(
           batch, layout, store, dist2Threshold = 1000L)._1
@@ -488,7 +488,8 @@ class ClusteringSpec extends SparkSuite {
       Clustering.writeKmeansIvfLayout(landed, s"$tmp/v0", stride = 30L)
       Clustering.writeKmeansIvfLayout(
         landed.unionAll(batch), s"$tmp/v1", stride = 25L)
-      val store = graft.operators.ClusterVecStore.open(spark, s"$tmp/st")
+      val store = graft.operators.BatchStore.open(spark, s"$tmp/st",
+        graft.operators.BatchStore.Vectors)
       val (_, init0) = Clustering.incrementalSemanticWithStore(
         landed, s"$tmp/v0", store, 1000L)
       assert(store.append(init0, "init"))
@@ -502,11 +503,12 @@ class ClusteringSpec extends SparkSuite {
         "fixture must demonstrate the stale-key hazard")
       // re-key, then compare against a store built fresh under v1
       assert(Clustering.rekeyStore(store, s"$tmp/v1") >= 1)
-      val fresh = graft.operators.ClusterVecStore.open(spark, s"$tmp/fr")
+      val fresh = graft.operators.BatchStore.open(spark, s"$tmp/fr",
+        graft.operators.BatchStore.Vectors)
       val (_, init1) = Clustering.incrementalSemanticWithStore(
         landed, s"$tmp/v1", fresh, 1000L)
       assert(fresh.append(init1, "init"))
-      def surv(st: graft.operators.ClusterVecStore): Set[(Long, Long)] =
+      def surv(st: graft.operators.BatchStore): Set[(Long, Long)] =
         Clustering.incrementalSemanticWithStore(batch, s"$tmp/v1",
             st, 1000L)._1
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -612,7 +612,7 @@ class OperatorsSpec extends SparkSuite {
         .select(col("doc_id"), col("text"))
         .filter(col("text").isNotNull)
       val landed = corpus.filter(col("doc_id") % 3 === 0)
-      val store = BandStore.open(spark, s"$tmp/hashes")
+      val store = BatchStore.open(spark, s"$tmp/hashes", BatchStore.Bands)
       store.append(landed.select(md5(col("text")).as("band")), "init")
       val batch = corpus.filter(col("doc_id") % 3 =!= 0)
         .unionAll(landed.limit(20)
@@ -676,7 +676,7 @@ class OperatorsSpec extends SparkSuite {
         .select(col("doc_id"), col("text"))
       val landedSlice = corpus.filter(col("doc_id") % 3 === 0)
       val known = Dedup.minhashSignatures(landedSlice, 8, Dedup.DefaultSeeds)
-      val store = BandStore.fromSignatures(spark, s"$tmp/bands", known)
+      val store = BatchStore.fromSignatures(spark, s"$tmp/bands", known)
       // batch with planted near-dups of landed docs and of itself
       val batch = corpus.filter(col("doc_id") % 3 =!= 0)
         .unionAll(landedSlice.limit(20)
@@ -734,46 +734,92 @@ class OperatorsSpec extends SparkSuite {
     }
   }
 
-  test("BandStore membership fuzz: across all three lookup tiers " +
-      "(pushed-In / broadcast-semi / shuffled join), knownAmong is " +
-      "exactly landed ∩ probe, regardless of batch-split history") {
+  test("BatchStore membership fuzz, both layouts: across all three " +
+      "lookup tiers (pushed-In / broadcast-semi / shuffled join), " +
+      "landedAmong is exactly the landed rows keyed in the probe, " +
+      "regardless of batch-split history") {
     val rng = new scala.util.Random(20260815L)
-    withTempDir { tmp =>
-      // landed universe: 400 bands, committed as 1-4 random batch splits
-      val all = (0 until 400).map(i => s"band_${rng.nextInt(100000)}_$i")
-      val store = BandStore.open(spark, s"$tmp/fuzz",
-        pushdownBandLimit = 32, broadcastBandLimit = 128)
+    for (layout <- Seq(BatchStore.Bands, BatchStore.Vectors))
+      withTempDir { tmp =>
+      // landed universe: 400 keys, committed as 1-4 random batch splits
+      val all = (0 until 400).map(i => s"key_${rng.nextInt(100000)}_$i")
+      // a Vectors key carries two members: a hit returns both rows
+      def rows(keys: Seq[String]): org.apache.spark.sql.DataFrame =
+        if (layout == BatchStore.Bands) keys.toDF("band")
+        else keys.flatMap(k => Seq(0L, 1L).map(j =>
+            (k, j, Seq(j, k.length.toLong))))
+          .toDF("ck", "vec_id", "fx")
+      def multiset(df: org.apache.spark.sql.DataFrame): Seq[String] =
+        df.collect().map(_.toString).toSeq.sorted
+      val store = BatchStore.open(spark, s"$tmp/fuzz", layout,
+        pushdownLimit = 32, broadcastLimit = 128)
       val splits = 1 + rng.nextInt(4)
       all.grouped((all.size + splits - 1) / splits).zipWithIndex
-        .foreach { case (g, i) =>
-          import spark.implicits._
-          assert(store.append(g.toDF("band"), s"f$i"))
-        }
-      val landed = all.toSet
+        .foreach { case (g, i) => assert(store.append(rows(g), s"f$i")) }
+      // a key landed by two batches comes back twice: lookups return
+      // landed rows, not a distinct
+      val twice = all.take(5)
+      assert(store.append(rows(twice), "dup"))
       // probe sizes chosen to land in each tier: ≤32 pushes In,
       // ≤128 broadcasts, >128 shuffles
       for (n <- Seq(1, 31, 32, 33, 100, 128, 129, 300)) {
         val hit = rng.shuffle(all).take(n / 2)
         val miss = (0 until (n - hit.size)).map(i => s"nothere_${i}_$n")
-        import spark.implicits._
-        val probe = rng.shuffle(hit ++ miss).toDF("band")
-        val got = store.knownAmong(probe).collect()
-          .map(_.getString(0)).toSet
-        assert(got == hit.toSet,
-          s"tier for n=$n: got ${got.size}, want ${hit.size}")
+        val probe = rng.shuffle(hit ++ miss).toDF(layout.key)
+        val want = hit ++ hit.filter(twice.contains)
+        assert(multiset(store.landedAmong(probe)) == multiset(rows(want)),
+          s"${layout.key} tier for n=$n: want ${want.size} keys")
       }
-      // compaction + expiry of a superseded split preserve the rule
-      store.compact()
-      val probe2 = {
-        import spark.implicits._
-        (all.take(10) ++ Seq("gone_a", "gone_b")).toDF("band")
-      }
-      assert(store.knownAmong(probe2).collect()
-        .map(_.getString(0)).toSet == all.take(10).toSet)
+      // compaction folds the duplicates and preserves the rule
+      assert(store.compact() == splits + 1)
+      val probe2 = (all.take(10) ++ Seq("gone_a", "gone_b"))
+        .toDF(layout.key)
+      assert(multiset(store.landedAmong(probe2)) ==
+        multiset(rows(all.take(10))))
     }
   }
 
-  test("BandStore tier-1 lookup never mutates the shared session's " +
+  /** Fresh store's lookup-session clone value of the driver-listing
+    * threshold, with the shared session's value set to `shared` (None
+    * = unset) for the store's first lookup. Restores the shared conf. */
+  private def listingThresholdOnClone(dir: String,
+      shared: Option[String]): (Option[String], Option[String]) = {
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val before = spark.conf.getAll.get(key)
+    try {
+      shared match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      val store = BatchStore.open(spark, dir, BatchStore.Bands)
+      store.append(Seq("a", "b").toDF("band"), "t0")
+      assert(store.landedAmong(Seq("a").toDF("band")).count() == 1L)
+      // getAll: explicitly set keys only (getOption reports defaults)
+      (store.lookupSession.conf.getAll.get(key), spark.conf.getAll.get(key))
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("store listing threshold: an explicit session setting (Spark's " +
+      "default 32 included) is kept on the lookup clone, an unset one " +
+      "gets ListingThreshold, and the shared session is never mutated") {
+    withTempDir { tmp =>
+      val (explicitClone, explicitShared) =
+        listingThresholdOnClone(s"$tmp/a", Some("32"))
+      assert(explicitClone.contains("32"),
+        s"explicit 32 must survive on the clone: $explicitClone")
+      assert(explicitShared.contains("32"))
+      val (unsetClone, unsetShared) = listingThresholdOnClone(s"$tmp/b", None)
+      assert(unsetClone.contains(BatchStore.ListingThreshold.toString),
+        s"unset session must get the store threshold: $unsetClone")
+      assert(unsetShared.isEmpty,
+        s"the raise leaked into the shared session: $unsetShared")
+    }
+  }
+
+  test("BatchStore tier-1 lookup never mutates the shared session's " +
       "parquet In-pushdown threshold (r18: the raise is scoped to a " +
       "session clone), and the raise is capped at the safe constant") {
     withTempDir { tmp =>
@@ -783,14 +829,14 @@ class OperatorsSpec extends SparkSuite {
         spark.conf.set(key, "10")
         // a store opened with a pushdownBandLimit far past the stack-
         // safety cap: the tier-1 raise must clamp to SafeInPushdownCap
-        val store = BandStore.open(spark, s"$tmp/bands",
-          pushdownBandLimit = 100000)
+        val store = BatchStore.open(spark, s"$tmp/bands", BatchStore.Bands,
+          pushdownLimit = 100000)
         store.append(spark.range(100)
           .select(concat(lit("b"), col("id")).as("band")), "init")
         val probe = spark.range(5)
           .select(concat(lit("b"), col("id")).as("band"))
         // materialized lookup (the real read path) + lazy plan check
-        val known = store.knownAmong(probe)
+        val known = store.landedAmong(probe)
         assert(known.count() == 5)
         assert(spark.conf.get(key) == "10",
           "tier-1 lookup leaked the threshold raise into the session")
@@ -805,10 +851,10 @@ class OperatorsSpec extends SparkSuite {
     }
   }
 
-  test("BandStore retention is mtime-independent: scrambled directory " +
+  test("BatchStore retention is mtime-independent: scrambled directory " +
       "mtimes still expire oldest-by-COMMIT (the _commitlog order)") {
     withTempDir { tmp =>
-      val store = BandStore.open(spark, s"$tmp/bands")
+      val store = BatchStore.open(spark, s"$tmp/bands", BatchStore.Bands)
       for (i <- 0 until 4)
         assert(store.append(spark.range(i * 10, i * 10 + 10)
           .select(concat(lit("c"), col("id")).as("band")), s"t$i"))
@@ -842,7 +888,7 @@ class OperatorsSpec extends SparkSuite {
         .parquet("/root/testdata/sf0.001/documents.parquet")
         .select(col("doc_id"), col("text")).limit(60)
       val sigs = Dedup.minhashSignatures(corpus, 8, Dedup.DefaultSeeds)
-      val store = BandStore.fromSignatures(spark, s"$tmp/bands", sigs)
+      val store = BatchStore.fromSignatures(spark, s"$tmp/bands", sigs)
       assert(store.append(spark.range(3)
         .select(concat(lit("x"), col("id")).as("band")), "t0"))
       assert(store.append(spark.range(3, 6)
@@ -866,7 +912,7 @@ class OperatorsSpec extends SparkSuite {
   test("store lookups are serialized against maintenance: concurrent " +
       "expire+compact sweeps never make knownAmong miss landed bands") {
     withTempDir { tmp =>
-      val store = BandStore.open(spark, s"$tmp/race")
+      val store = BatchStore.open(spark, s"$tmp/race", BatchStore.Bands)
       val landed = (0 until 200).map(i => s"rb_$i")
       landed.grouped(25).zipWithIndex.foreach { case (g, i) =>
         assert(store.append(g.toDF("band"), s"r$i"))
@@ -893,7 +939,7 @@ class OperatorsSpec extends SparkSuite {
       maint.start()
       try {
         for (_ <- 0 until 12) {
-          val got = store.knownAmong(probe).collect()
+          val got = store.landedAmong(probe).collect()
             .map(_.getString(0)).toSet
           if (!landed.forall(got.contains)) misses.incrementAndGet()
         }
@@ -908,7 +954,7 @@ class OperatorsSpec extends SparkSuite {
       "maintenance fast with a clean error, a stale (crashed) one is " +
       "reclaimed, and membership survives the whole episode") {
     withTempDir { tmp =>
-      val store = BandStore.open(spark, s"$tmp/own")
+      val store = BatchStore.open(spark, s"$tmp/own", BatchStore.Bands)
       assert(store.append(Seq("a", "b").toDF("band"), "t0"))
       assert(store.append(Seq("c").toDF("band"), "t1"))
       assert(store.compact() == 2) // first mutation claims the lease
@@ -941,7 +987,7 @@ class OperatorsSpec extends SparkSuite {
       "lost — every append that returned true is in the final member " +
       "set (the rekey reads the landed frame UNDER the write lock)") {
     withTempDir { tmp =>
-      val store = ClusterVecStore.open(spark, s"$tmp/rk")
+      val store = BatchStore.open(spark, s"$tmp/rk", BatchStore.Vectors)
       def members(ids: Seq[Long]) =
         ids.map(i => (s"ck_${i % 7}", i, Seq(i, i + 1L)))
           .toDF("ck", "vec_id", "fx")
@@ -1073,7 +1119,7 @@ class OperatorsSpec extends SparkSuite {
   test("incrementalImageDedupWithStore: id-ordered batch splits " +
       "compose to the one-shot near-dup drop rule (all-seen landing), " +
       "and a landed batch fully drops on rerun") {
-    import graft.operators.{ClusterVecStore, Multimodal}
+    import graft.operators.{BatchStore, Multimodal}
     withTempDir { tmp =>
       val docs = spark.read
         .parquet("/root/testdata/sf0.001/documents.parquet")
@@ -1091,7 +1137,7 @@ class OperatorsSpec extends SparkSuite {
       val oneShot = hashes.collect().map(_.getLong(0)).toSet -- dropIds
       assert(dropIds.nonEmpty, "fixture must contain near pairs")
       // incremental: split at an id boundary, land all-seen members
-      val store = ClusterVecStore.open(spark, s"$tmp/imgs")
+      val store = BatchStore.open(spark, s"$tmp/imgs", BatchStore.Vectors)
       val b1 = all.filter(col("doc_id") < 250)
       val b2 = all.filter(col("doc_id") >= 250)
       val (s1, m1) = Multimodal.incrementalImageDedupWithStore(b1, store)

@@ -7,11 +7,12 @@ import graft.SparkSuite
 /** Pins the round-21 write-path properties the optimization round
   * changed:
   *
-  *  1. a store append writes AT MOST ONE file per bucket dir, and every
-  *     file is genuinely sorted by its membership key — the property
-  *     the pre-r21 writer silently voided (the dynamic-partition
-  *     writer inserted a non-stable sort by `bp` over the key-sorted
-  *     rows) and the row-group-stat pruning tiers depend on;
+  *  1. a [[BatchStore]] append writes AT MOST ONE file per bucket dir,
+  *     in either layout, and every file is genuinely sorted by its
+  *     membership key — the property the pre-r21 writer silently
+  *     voided (the dynamic-partition writer inserted a non-stable sort
+  *     by `bp` over the key-sorted rows) and the row-group-stat pruning
+  *     tiers depend on;
   *  2. [[Multimodal.imageNearDupPairs]]' hot-clique salted path emits
   *     EXACTLY the plain path's pair set — the de-skew split must be
   *     invisible in the relation.
@@ -34,48 +35,96 @@ class StoreLayoutSpec extends SparkSuite {
       .map { case (f, rows) => f -> rows.map(_.getString(1)).toSeq }
   }
 
-  test("BandStore.append writes one band-sorted file per touched bucket") {
-    withTempDir { tmp =>
-      val store = BandStore.open(spark, s"$tmp/bands")
-      import spark.implicits._
-      // enough distinct bands to touch every bucket several times over
-      val bands = (1 to 5000).map(i => s"band_%04d".format(i)).toDF("band")
-      assert(store.append(bands, "b0"))
-      val perFile = fileKeys(s"$tmp/bands", "band",
-        Seq("band" -> "string", "batch" -> "string", "bp" -> "bigint"))
-      assert(perFile.nonEmpty)
-      // one file per bp dir: no two files share a parent directory
-      val parents = perFile.keys.toSeq
-        .map(f => f.substring(0, f.lastIndexOf('/')))
-      assert(parents.distinct.size == parents.size,
-        s"expected at most one file per bp dir, got ${parents.size} " +
-          s"files over ${parents.distinct.size} dirs")
-      // every file's rows arrive in band order (the row-group-stat
-      // tightness the pruned lookup tiers rely on)
-      perFile.foreach { case (f, keys) =>
-        assert(keys == keys.sorted, s"file $f not band-sorted")
-      }
+  /** One append per layout — enough distinct keys to touch every bucket
+    * several times over — with the on-disk schema spelled out, not
+    * derived from the layout, so the test pins the file format. */
+  private def layoutCases = {
+    import spark.implicits._
+    Seq(
+      (BatchStore.Bands, Seq("band" -> "string"),
+        (1 to 5000).map(i => "band_%04d".format(i)).toDF("band")),
+      (BatchStore.Vectors,
+        Seq("ck" -> "string", "vec_id" -> "bigint", "fx" -> "array<bigint>"),
+        (1 to 3000)
+          .map(i => ("ck_%04d".format(i % 500), i.toLong, Seq(i.toLong)))
+          .toDF("ck", "vec_id", "fx")))
+  }
+
+  /** Appends `rows` to a fresh store of `layout` and checks the store
+    * wrote at most one file per bp dir, each sorted by the layout key. */
+  private def assertOneSortedFilePerBucket(layout: BatchStore.Layout,
+      cols: Seq[(String, String)],
+      rows: org.apache.spark.sql.DataFrame): Unit = withTempDir { tmp =>
+    val store = BatchStore.open(spark, s"$tmp/store", layout)
+    assert(store.append(rows, "b0"))
+    val perFile = fileKeys(s"$tmp/store", layout.key,
+      cols ++ Seq("batch" -> "string", "bp" -> "bigint"))
+    assert(perFile.nonEmpty)
+    // one file per bp dir: no two files share a parent directory
+    val parents = perFile.keys.toSeq
+      .map(f => f.substring(0, f.lastIndexOf('/')))
+    assert(parents.distinct.size == parents.size,
+      s"${layout.key}: expected at most one file per bp dir, got " +
+        s"${parents.size} files over ${parents.distinct.size} dirs")
+    // every file's rows arrive in key order (the row-group-stat
+    // tightness the pruned lookup tiers rely on)
+    perFile.foreach { case (f, keys) =>
+      assert(keys == keys.sorted, s"file $f not ${layout.key}-sorted")
     }
   }
 
+  test("BandStore.append writes one band-sorted file per touched bucket") {
+    val (layout, cols, rows) = layoutCases(0)
+    assertOneSortedFilePerBucket(layout, cols, rows)
+  }
+
   test("ClusterVecStore.append writes one ck-sorted file per touched bucket") {
-    withTempDir { tmp =>
-      val store = ClusterVecStore.open(spark, s"$tmp/vecs")
-      import spark.implicits._
-      val members = (1 to 3000)
-        .map(i => (s"ck_%04d".format(i % 500), i.toLong, Seq(i.toLong)))
-        .toDF("ck", "vec_id", "fx")
-      assert(store.append(members, "b0"))
-      val perFile = fileKeys(s"$tmp/vecs", "ck",
-        Seq("ck" -> "string", "vec_id" -> "bigint",
-          "fx" -> "array<bigint>", "batch" -> "string", "bp" -> "bigint"))
-      assert(perFile.nonEmpty)
-      val parents = perFile.keys.toSeq
-        .map(f => f.substring(0, f.lastIndexOf('/')))
-      assert(parents.distinct.size == parents.size)
-      perFile.foreach { case (f, keys) =>
-        assert(keys == keys.sorted, s"file $f not ck-sorted")
+    val (layout, cols, rows) = layoutCases(1)
+    assertOneSortedFilePerBucket(layout, cols, rows)
+  }
+
+  /** Shuffle exchanges planned by each parquet write `f` runs. */
+  private def writeExchanges(f: => Unit): Seq[Int] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val helper = new AdaptiveSparkPlanHelper {}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        helper.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec])
+          .foreach(w => seen.add(
+            helper.collect(w) { case e: ShuffleExchangeLike => e }.size))
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      f
+      // listener events are async: wait until the count is nonzero
+      // and stable
+      var prev = -1
+      var spins = 0
+      while ((seen.size != prev || seen.isEmpty) && spins < 100) {
+        prev = seen.size; Thread.sleep(50); spins += 1
       }
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a Vectors append and a Vectors compaction each plan exactly " +
+      "one Exchange (dedup rides the bucket shuffle)") {
+    withTempDir { tmp =>
+      val store = BatchStore.open(spark, s"$tmp/vecs", BatchStore.Vectors)
+      val rows = layoutCases(1)._3
+      assert(writeExchanges(assert(store.append(rows, "b0"))) == Seq(1))
+      assert(writeExchanges(assert(store.append(rows, "b1"))) == Seq(1))
+      assert(writeExchanges(assert(store.compact() == 2)) == Seq(1))
+      // the second copy of every (ck, vec_id) folded away
+      assert(store.read().count() == 3000L)
     }
   }
 
@@ -89,7 +138,7 @@ class StoreLayoutSpec extends SparkSuite {
         .select(col("vec_id"), col("embedding"))
       val root = s"$tmp/root"
       IvfVersions.init(e.filter(col("vec_id") < 250), root)
-      val store = ClusterVecStore.open(spark, s"$tmp/store")
+      val store = BatchStore.open(spark, s"$tmp/store", BatchStore.Vectors)
       val (_, init) = Clustering.incrementalSemanticWithStore(
         e.filter(col("vec_id") < 250),
         IvfVersions.currentDir(root), store, 1000L)

@@ -299,11 +299,11 @@ class StreamingDedupSpec extends SparkSuite {
       // crash before the band/vector appends — the dangerous window
       // where a lookup WITHOUT self-tag exclusion would see the batch's
       // own hashes landed, drop everything, and land EMPTY band state
-      val bandsBefore = graft.operators.BandStore
-        .open(spark, s"$tmp/state_a/bands").read()
+      val bandsBefore = graft.operators.BatchStore.open(spark,
+        s"$tmp/state_a/bands", graft.operators.BatchStore.Bands).read()
         .select("band").collect().map(_.getString(0)).toSet
-      val vecsBefore = graft.operators.ClusterVecStore
-        .open(spark, s"$tmp/state_a/vecs").read()
+      val vecsBefore = graft.operators.BatchStore.open(spark,
+        s"$tmp/state_a/vecs", graft.operators.BatchStore.Vectors).read()
         .select("vec_id").collect().map(_.getLong(0)).toSet
       def lastCommit(): java.nio.file.Path = {
         import scala.jdk.CollectionConverters._
@@ -333,16 +333,16 @@ class StreamingDedupSpec extends SparkSuite {
         s"$tmp/state_a/vecs/batch=$lastId"))
       assert(run("a", Some(1), 0) == multi,
         "partial replay changed the packed survivor set")
-      val bandsAfter = graft.operators.BandStore
-        .open(spark, s"$tmp/state_a/bands").read()
+      val bandsAfter = graft.operators.BatchStore.open(spark,
+        s"$tmp/state_a/bands", graft.operators.BatchStore.Bands).read()
         .select("band").collect().map(_.getString(0)).toSet
       assert(bandsAfter == bandsBefore,
         s"replayed band append must restore the ORIGINAL bands " +
           s"(${bandsBefore.size} before, ${bandsAfter.size} after) — " +
           "an empty re-append means the exact-stage lookup saw the " +
           "batch's own hashes (self-tag exclusion broken)")
-      val vecsAfter = graft.operators.ClusterVecStore
-        .open(spark, s"$tmp/state_a/vecs").read()
+      val vecsAfter = graft.operators.BatchStore.open(spark,
+        s"$tmp/state_a/vecs", graft.operators.BatchStore.Vectors).read()
         .select("vec_id").collect().map(_.getLong(0)).toSet
       assert(vecsAfter == vecsBefore, "vector members must restore")
       val outIds = spark.read.parquet(s"$tmp/out_a").drop("batch")
@@ -407,7 +407,7 @@ class StreamingDedupSpec extends SparkSuite {
       "batch operator's survivor set; a rerun on the same checkpoint " +
       "replays to identical output and store state") {
     import org.apache.spark.sql.functions._
-    import graft.operators.{ClusterVecStore, Multimodal}
+    import graft.operators.{BatchStore, Multimodal}
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
     withTempDir { tmp =>
@@ -443,7 +443,8 @@ class StreamingDedupSpec extends SparkSuite {
             concat(expr("substring(payload, 1, length(payload) - 8)"),
               lit("zzzzzzzz").cast("binary")).as("payload")))
       // one-shot twin: the batch operator on the identical planted set
-      val refStore = ClusterVecStore.open(spark, s"$tmp/refstore")
+      val refStore = BatchStore.open(spark, s"$tmp/refstore",
+        BatchStore.Vectors)
       val (_, init) = Multimodal
         .incrementalImageDedupWithStore(landed, refStore)
       assert(refStore.append(init, "init"))
@@ -461,10 +462,12 @@ class StreamingDedupSpec extends SparkSuite {
       val nBatches = java.nio.file.Files
         .list(java.nio.file.Paths.get(s"$tmp/ck/offsets")).count()
       assert(nBatches >= 3, s"expected >=3 micro-batches, got $nBatches")
-      val tags = ClusterVecStore.open(spark, s"$tmp/store").batchTags()
+      val tags = BatchStore.open(spark, s"$tmp/store",
+        BatchStore.Vectors).batchTags()
       // idempotent rerun: same output, no new store batches
       assert(run() == oneShot, "rerun changed the survivor set")
-      assert(ClusterVecStore.open(spark, s"$tmp/store").batchTags()
+      assert(BatchStore.open(spark, s"$tmp/store",
+        BatchStore.Vectors).batchTags()
         == tags, "rerun appended new store state")
     }
   }
@@ -558,7 +561,7 @@ class StreamingDedupSpec extends SparkSuite {
       "real foreachBatch loop, and a replayed micro-batch (full AND " +
       "partial commit) cannot double-land survivors or members") {
     import org.apache.spark.sql.functions._
-    import graft.operators.{Clustering, ClusterVecStore}
+    import graft.operators.{BatchStore, Clustering}
     val emb = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
     withTempDir { tmp =>
@@ -605,7 +608,8 @@ class StreamingDedupSpec extends SparkSuite {
       assert(nBatches >= 3, s"expected >=3 micro-batches, got $nBatches")
       // one-shot batch-operator equivalent: the same slices as ONE
       // batch against a fresh store seeded with the same landed state
-      val oneStore = ClusterVecStore.open(spark, s"$tmp/store_oneshot")
+      val oneStore = BatchStore.open(spark, s"$tmp/store_oneshot",
+        BatchStore.Vectors)
       val (_, initMembers) = Clustering.incrementalSemanticWithStore(
         landed, layout, oneStore, 1000L)
       oneStore.append(initMembers, "init")
@@ -619,7 +623,7 @@ class StreamingDedupSpec extends SparkSuite {
       // planted d2=0 copies never survive (their base is landed or a
       // smaller id in the same or an earlier batch)
       assert(!got.exists(_._1 >= 1000000L), "a planted copy survived")
-      val store = ClusterVecStore.open(spark, s"$tmp/store")
+      val store = BatchStore.open(spark, s"$tmp/store", BatchStore.Vectors)
       val tagsBefore = store.batchTags().toSet
       def lastCommit(): java.nio.file.Path = {
         import scala.jdk.CollectionConverters._
@@ -669,7 +673,7 @@ class StreamingDedupSpec extends SparkSuite {
       "re-keyed store, no landed membership is lost, and the stream " +
       "equals the batch composition with the same cutover point") {
     import org.apache.spark.sql.functions._
-    import graft.operators.{Clustering, ClusterVecStore, IvfVersions}
+    import graft.operators.{BatchStore, Clustering, IvfVersions}
     val emb = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
     withTempDir { tmp =>
@@ -715,7 +719,7 @@ class StreamingDedupSpec extends SparkSuite {
         onRetrain = v => {
           cuts = v :: cuts
           Clustering.rekeyStore(
-            ClusterVecStore.open(spark, storeDir),
+            BatchStore.open(spark, storeDir, BatchStore.Vectors),
             IvfVersions.currentDir(root))
         })
       // the drift sweep fires after batch 0's commits: batches 1-2
@@ -740,7 +744,7 @@ class StreamingDedupSpec extends SparkSuite {
       // batches 1-2 under the v1-equivalent layout
       val v0 = s"$tmp/v0twin"
       Clustering.writeKmeansIvfLayout(landed, v0, stride = 20L)
-      val twin = ClusterVecStore.open(spark, s"$tmp/twinstore")
+      val twin = BatchStore.open(spark, s"$tmp/twinstore", BatchStore.Vectors)
       val (_, init) = Clustering.incrementalSemanticWithStore(
         landed, v0, twin, 1000L)
       assert(twin.append(init, "init"))
@@ -768,7 +772,8 @@ class StreamingDedupSpec extends SparkSuite {
           s"${(got -- expected).take(3)} / ${(expected -- got).take(3)}")
       // landed membership survived the cutover: the stream store's
       // member ids equal the twin's (all-seen, re-keyed, nothing lost)
-      val streamIds = ClusterVecStore.open(spark, storeDir).read()
+      val streamIds = BatchStore.open(spark, storeDir,
+        BatchStore.Vectors).read()
         .select("vec_id").distinct().collect().map(_.getLong(0)).toSet
       val twinIds = twin.read()
         .select("vec_id").distinct().collect().map(_.getLong(0)).toSet
@@ -778,7 +783,8 @@ class StreamingDedupSpec extends SparkSuite {
           s"${(twinIds -- streamIds).take(3)}")
       // and the re-keyed buckets match the new layout: every stream
       // store ck equals the twin store's ck for the same vec_id
-      val streamCks = ClusterVecStore.open(spark, storeDir).read()
+      val streamCks = BatchStore.open(spark, storeDir,
+        BatchStore.Vectors).read()
         .select("vec_id", "ck").distinct().collect()
         .map(r => (r.getLong(0), r.getString(1))).toSet
       val twinCks = twin.read()
@@ -794,7 +800,7 @@ class StreamingDedupSpec extends SparkSuite {
       "duplicate-free, and the final store is a re-key fixpoint of " +
       "the final layout") {
     import org.apache.spark.sql.functions._
-    import graft.operators.{Clustering, ClusterVecStore, IvfVersions}
+    import graft.operators.{BatchStore, Clustering, IvfVersions}
     val emb = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
     withTempDir { tmp =>
@@ -829,7 +835,7 @@ class StreamingDedupSpec extends SparkSuite {
         onRetrain = _ => {
           cuts.incrementAndGet()
           Clustering.rekeyStore(
-            ClusterVecStore.open(spark, storeDir),
+            BatchStore.open(spark, storeDir, BatchStore.Vectors),
             IvfVersions.currentDir(root))
         })
       // ONE background sweeper (the contract: one drift task per
@@ -856,7 +862,7 @@ class StreamingDedupSpec extends SparkSuite {
       // the store holds every id the stream saw (all-seen landing)
       val ids = got.map(_._1)
       assert(ids.size == got.size, "duplicate survivor vec_ids")
-      val store = ClusterVecStore.open(spark, storeDir)
+      val store = BatchStore.open(spark, storeDir, BatchStore.Vectors)
       val memberIds = store.read().select("vec_id").distinct()
         .collect().map(_.getLong(0)).toSet
       val expectedIds = emb.filter(col("vec_id") >= 100)
@@ -884,7 +890,7 @@ class StreamingDedupSpec extends SparkSuite {
       "retrain + re-key landing while the stream was down, replays to " +
       "the ORIGINAL survivors and a complete, new-layout-keyed store") {
     import org.apache.spark.sql.functions._
-    import graft.operators.{Clustering, ClusterVecStore, IvfVersions}
+    import graft.operators.{BatchStore, Clustering, IvfVersions}
     val emb = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet")
     withTempDir { tmp =>
@@ -919,7 +925,7 @@ class StreamingDedupSpec extends SparkSuite {
             maxFilesPerTrigger = Some(1))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val got = run() // all three batches land under v=0
-      val store = ClusterVecStore.open(spark, storeDir)
+      val store = BatchStore.open(spark, storeDir, BatchStore.Vectors)
       val memberIdsBefore = store.read().select("vec_id").distinct()
         .collect().map(_.getLong(0)).toSet
       // simulate the crash window: last batch's survivors committed,
@@ -1120,5 +1126,17 @@ class StreamingDedupSpec extends SparkSuite {
     assert(streamed == batch, s"stream != batch: ${
       (streamed diff batch).take(3)} vs ${(batch diff streamed).take(3)}")
     assert(batch.nonEmpty)
+  }
+
+  test("overlapped: when main and two side tasks fail, main's error is " +
+      "thrown carrying both side errors as suppressed") {
+    val boom = new IllegalStateException("main")
+    val sides = Seq("s1", "s2").map(n =>
+      n -> (() => throw new RuntimeException(n)))
+    val thrown = intercept[IllegalStateException] {
+      StreamOps.overlapped(spark, sides) { throw boom }
+    }
+    assert(thrown eq boom)
+    assert(thrown.getSuppressed.map(_.getMessage).toSet == Set("s1", "s2"))
   }
 }
