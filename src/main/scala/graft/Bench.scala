@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import scala.util.control.NonFatal
+
 /** Benchmark main: runs every driver-contract query on
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -52,7 +54,7 @@ object Bench {
     // engine-table build so eng_* entries measure queries, not bulk load
     run(spark.read.parquet(s"$sfDir/lineitem.parquet"))
     try run(SparkEntry.queries("eng_get_row")(spark, sfDir))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] warmup failed: ${e.getMessage}")
     }
 
@@ -86,7 +88,7 @@ object Bench {
           run(fn(spark, sfDir))
           Some((System.nanoTime() - t0) / 1e9)
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             errors.getOrElseUpdate(name,
               Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
             None
@@ -113,7 +115,7 @@ object Bench {
     // as same-boot (comparable) or cross-boot (absolute ratios void)
     def readFirstLine(p: String): String =
       try scala.io.Source.fromFile(p).getLines().next().trim
-      catch { case _: Throwable => "unknown" }
+      catch { case NonFatal(_) => "unknown" }
     val bootId = readFirstLine("/proc/sys/kernel/random/boot_id")
     val uptimeSec = readFirstLine("/proc/uptime").split(" ").headOption
       .flatMap(_.toDoubleOption).getOrElse(-1.0)
@@ -124,14 +126,16 @@ object Bench {
     // `parsed: null` (the line competes with sbt noise and the recorder's
     // 2000-char tail truncation clips its head), so ALSO (additions only):
     //  - write the identical JSON to deterministic files a consumer can
-    //    read without parsing stdout at all;
+    //    read without parsing stdout at all. The paths are fixed, so they
+    //    assume ONE Bench run at a time: concurrent runs overwrite each
+    //    other's copy (the stdout line stays per-run);
     //  - print a sentinel-prefixed copy first, so a grep for a stable
     //    token recovers the full line from any log capture.
     def writeQuietly(path: String): Unit =
       try {
         val w = new java.io.PrintWriter(path, "UTF-8")
         try w.println(line) finally w.close()
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     writeQuietly("/tmp/graft_bench_last.json")
     writeQuietly("bench_out.json")
     println(s"BENCH_JSON $line")

@@ -68,7 +68,7 @@ object SparkEntry {
     * all six order columns for every consumer), but it prunes ordinary
     * Project columns fine — a count-shaped consumer that never touches
     * `vs`/`vd` now scans `struct<o_orderkey:bigint>` alone. */
-  private def orderCellsEntries(s: SparkSession, dir: String,
+  private[graft] def orderCellsEntries(s: SparkSession, dir: String,
       keep: (String, String) => Boolean): DataFrame = {
     val o = orders(s, dir)
     val entries = Seq[(String, String, Column, Column)](
@@ -79,6 +79,8 @@ object SparkEntry {
       ("m", "date",
         date_format(col("o_orderdate"), "yyyy-MM-dd"), lit(null)))
       .filter { case (f, q, _, _) => keep(f, q) }
+    require(entries.nonEmpty,
+      "orderCellsEntries: the keep predicate rejects every order cell")
     val tags = entries.zipWithIndex.map { case ((f, q, _, _), i) =>
       struct(lit(i).as("i"), lit(f).as("family"), lit(q).as("qualifier"))
     }
@@ -637,10 +639,7 @@ object SparkEntry {
         mtime += 10000
         java.nio.file.Files.setLastModifiedTime(dest,
           java.nio.file.attribute.FileTime.fromMillis(mtime))
-        import scala.jdk.CollectionConverters._
-        val w = java.nio.file.Files.walk(java.nio.file.Paths.get(stage))
-        val all = try w.iterator().asScala.toSeq finally w.close()
-        all.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+        graft.core.PathIO.deleteRecursively(java.nio.file.Paths.get(stage))
       }
       val root = s"$tmp/root"
       graft.operators.IvfVersions.init(
@@ -713,10 +712,7 @@ object SparkEntry {
         require(new java.io.File(path, "_SUCCESS").exists(),
           s"layout rename $tmp -> $path failed but the destination " +
             "is not a complete layout (no _SUCCESS)")
-        import scala.jdk.CollectionConverters._
-        val st = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))
-        val all = try st.iterator().asScala.toSeq finally st.close()
-        all.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+        graft.core.PathIO.deleteRecursively(java.nio.file.Paths.get(tmp))
       }
     }
     path

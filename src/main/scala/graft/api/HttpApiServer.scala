@@ -3,6 +3,8 @@ package graft.api
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
+import scala.util.control.NonFatal
+
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
 import graft.json.JsonValue
@@ -151,7 +153,7 @@ final class HttpApiServer(api: JsonApi, port: Int = 9876,
             }
         }
       } catch {
-        case _: Throwable =>
+        case NonFatal(_) =>
           // reference: ResponseError -> plain 500 (`server/src/error.rs`)
           respond(ex, 500, "text/plain", "Internal Server Error")
       } finally {
@@ -162,7 +164,7 @@ final class HttpApiServer(api: JsonApi, port: Int = 9876,
         val ms = (System.nanoTime() - t0) / 1e6
         try accessLog(f""""${ex.getRequestMethod} ${ex.getRequestURI} ${ex
             .getProtocol}" ${ex.getResponseCode} $ms%.1fms - $ua""")
-        catch { case _: Throwable => () } // a broken sink must not leak the exchange
+        catch { case NonFatal(_) => () } // a broken sink must not leak the exchange
         ex.close()
       }
     }

@@ -2,6 +2,8 @@ package graft.core
 
 import java.util.concurrent.{Executors, ThreadFactory, TimeUnit}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Background maintenance workers, mirroring `server/src/worker/mod.rs`:
@@ -78,7 +80,6 @@ final class Workers(spark: SparkSession, catalog: Catalog,
     * let a throwing `dataPoint` defeat the per-task isolation). */
   def maintenanceSweep(): Unit = {
     import scala.jdk.CollectionConverters._
-    import scala.util.control.NonFatal
     maintenance.asScala.toSeq.sortBy(_._1).foreach { case (name, task) =>
       try task()
       catch {
@@ -126,7 +127,7 @@ final class Workers(spark: SparkSession, catalog: Catalog,
   private def safely(f: () => Unit): Runnable = new Runnable {
     override def run(): Unit =
       try f()
-      catch { case e: Throwable => System.err.println(s"[workers] ${e.getMessage}") }
+      catch { case NonFatal(e) => System.err.println(s"[workers] ${e.getMessage}") }
   }
 
   /** Start all three workers (daemon thread). */

@@ -22,7 +22,7 @@ object StreamOps {
     * users / content hashes) outgrows memory long before the event volume
     * does. RocksDB spills keyed state to local disk with a bounded block
     * cache, so state size is a disk problem, not a heap problem. The
-    * file-sink scale variants below run on it by default; the memory-sink
+    * keyed-state file-sink scale variants below run on it; the memory-sink
     * oracle harnesses keep the default provider (their state is test-sized
     * by construction and the harness itself is the driver-collect shape).
     */
@@ -33,20 +33,44 @@ object StreamOps {
 
   /** Runs `f` with the RocksDB state store provider set in the session conf
     * (the provider is captured at query START, so set-run-restore is safe
-    * for the synchronous processAllAvailable harness shape used here).
+    * for the synchronous drains used here).
     */
-  private def withRocksDB[T](s: SparkSession, enabled: Boolean)(f: => T): T = {
-    if (!enabled) f
-    else {
-      val prev = s.conf.getOption(ProviderKey)
-      s.conf.set(ProviderKey, RocksDBProvider)
-      try f
-      finally prev match {
-        case Some(v) => s.conf.set(ProviderKey, v)
-        case None    => s.conf.unset(ProviderKey)
-      }
+  private def withRocksDB[T](s: SparkSession)(f: => T): T = {
+    val prev = s.conf.getOption(ProviderKey)
+    s.conf.set(ProviderKey, RocksDBProvider)
+    try f
+    finally prev match {
+      case Some(v) => s.conf.set(ProviderKey, v)
+      case None    => s.conf.unset(ProviderKey)
     }
   }
+
+  /** The scale shape's sink: `stream` drained synchronously in append
+    * mode into a parquet FILE sink (distributed writes, exactly-once via
+    * the sink's commit log under `checkpointDir`), then the landed
+    * output re-read. Callers that keep keyed state wrap it in
+    * [[withRocksDB]]. */
+  private def drainToFiles(s: SparkSession, stream: DataFrame,
+      outDir: String, checkpointDir: String): DataFrame = {
+    val q = stream.writeStream
+      .outputMode("append")
+      .format("parquet")
+      .option("path", outDir)
+      .option("checkpointLocation", checkpointDir)
+      .start()
+    try q.processAllAvailable()
+    finally q.stop()
+    s.read.parquet(outDir)
+  }
+
+  /** The `documents` table's schema for every documents stream source
+    * (the file source takes a user-specified schema on faith). */
+  private val DocSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("text", StringType),
+    StructField("lang", StringType),
+    StructField("source", StringType),
+    StructField("n_chars", LongType)))
 
   /** Streaming events source with `ts` normalized to epoch-ns Long and an
     * `event_ts` TimestampType column for watermarks — schema-adaptive.
@@ -111,19 +135,23 @@ object StreamOps {
     */
   private def windowAggDrain(s: SparkSession, dir: String,
       duration: String, slide: Option[String]): DataFrame =
-    drainMemorySink(s, "stream_window", "complete") {
-      val win = slide match {
-        case Some(sl) => window(col("event_ts"), duration, sl)
-        case None     => window(col("event_ts"), duration)
-      }
-      eventsStream(s, dir)
-        .withWatermark("event_ts", "1 hour")
-        .groupBy(win, col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(expr("cast(round(value * 1000000) as bigint)")).as("value_sum"))
-        .select(col("window.start").as("window_start"), col("event_type"),
-          col("n_events"), col("value_sum"))
+    drainMemorySink(s, "stream_window", "complete")(
+      windowAggStream(s, dir, duration, slide))
+
+  private def windowAggStream(s: SparkSession, dir: String,
+      duration: String, slide: Option[String]): DataFrame = {
+    val win = slide match {
+      case Some(sl) => window(col("event_ts"), duration, sl)
+      case None     => window(col("event_ts"), duration)
     }
+    eventsStream(s, dir)
+      .withWatermark("event_ts", "1 hour")
+      .groupBy(win, col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(expr("cast(round(value * 1000000) as bigint)")).as("value_sum"))
+      .select(col("window.start").as("window_start"), col("event_type"),
+        col("n_events"), col("value_sum"))
+  }
 
   /** Daily distinct-user ESTIMATES through a real streaming query: the
     * deterministic KMV sketch ([[graft.operators.Corpus.kmvDistinct]])
@@ -137,44 +165,27 @@ object StreamOps {
     * (`ext_stream_kmv`).
     */
   def dailyKmvDistinctUsers(s: SparkSession, dir: String): DataFrame =
-    drainMemorySink(s, "stream_kmv", "complete") {
-      eventsStream(s, dir)
-        .withWatermark("event_ts", "1 hour")
-        .groupBy(window(col("event_ts"), "1 day"))
-        .agg(graft.operators.Corpus.kmvDistinct(col("user_id"))
-            .as("est_users"),
-          count(lit(1)).as("n_events"))
-        .select(unix_micros(col("window.start")).as("window_start_us"),
-          col("est_users"), col("n_events"))
-    }
+    drainMemorySink(s, "stream_kmv", "complete")(dailyKmvStream(s, dir))
 
   /** [[dailyKmvDistinctUsers]] in its scale shape: append mode (only
     * watermark-finalized windows emit), parquet file sink, RocksDB
     * state — per-window sketch buffers live on executor-local disk and
     * finalized estimates land exactly-once via the sink commit log. */
   def dailyKmvDistinctUsersToFiles(s: SparkSession, dir: String,
-      outDir: String, checkpointDir: String,
-      rocksDB: Boolean = true): DataFrame = {
-    withRocksDB(s, rocksDB) {
-      val agg = eventsStream(s, dir)
-        .withWatermark("event_ts", "1 hour")
-        .groupBy(window(col("event_ts"), "1 day"))
-        .agg(graft.operators.Corpus.kmvDistinct(col("user_id"))
-            .as("est_users"),
-          count(lit(1)).as("n_events"))
-        .select(unix_micros(col("window.start")).as("window_start_us"),
-          col("est_users"), col("n_events"))
-      val q = agg.writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      outDir: String, checkpointDir: String): DataFrame =
+    withRocksDB(s) {
+      drainToFiles(s, dailyKmvStream(s, dir), outDir, checkpointDir)
     }
-    s.read.parquet(outDir)
-  }
+
+  private def dailyKmvStream(s: SparkSession, dir: String): DataFrame =
+    eventsStream(s, dir)
+      .withWatermark("event_ts", "1 hour")
+      .groupBy(window(col("event_ts"), "1 day"))
+      .agg(graft.operators.Corpus.kmvDistinct(col("user_id"))
+          .as("est_users"),
+        count(lit(1)).as("n_events"))
+      .select(unix_micros(col("window.start")).as("window_start_us"),
+        col("est_users"), col("n_events"))
 
   /** Tumbling 1-hour window aggregation driven through a REAL streaming
     * query ([[windowAggDrain]]). Returns the complete result. */
@@ -187,13 +198,7 @@ object StreamOps {
     * which attaches its own sink so it can kill and resume the query on
     * one checkpoint. */
   def hourlyWindowAggStream(s: SparkSession, dir: String): DataFrame =
-    eventsStream(s, dir)
-      .withWatermark("event_ts", "1 hour")
-      .groupBy(window(col("event_ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(expr("cast(round(value * 1000000) as bigint)")).as("value_sum"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_events"), col("value_sum"))
+    windowAggStream(s, dir, "1 hour", None)
 
   /** Scale variant of [[hourlyWindowAgg]]: watermarked APPEND mode into a
     * parquet FILE sink — the 100 TB shape. The complete-mode memory sink
@@ -205,17 +210,8 @@ object StreamOps {
     * streaming/batch boundary (StreamingWindowSinkSpec pins it down).
     */
   def hourlyWindowAggToFiles(s: SparkSession, dir: String, outDir: String,
-      checkpointDir: String): DataFrame = {
-    val q = hourlyWindowAggStream(s, dir).writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    s.read.parquet(outDir)
-  }
+      checkpointDir: String): DataFrame =
+    drainToFiles(s, hourlyWindowAggStream(s, dir), outDir, checkpointDir)
 
   /** Streaming exact-dedup with custom state: documents arrive as a file
     * stream, group by content hash, and `flatMapGroupsWithState` keeps a
@@ -251,19 +247,11 @@ object StreamOps {
     * state store — the scale shape (see [[streamingDedupToFiles]]). */
   def streamingDedupBoundedToFiles(s: SparkSession, dir: String,
       outDir: String, checkpointDir: String,
-      horizon: String = "1 hour", rocksDB: Boolean = true): DataFrame = {
-    withRocksDB(s, rocksDB) {
-      val q = boundedDedupStream(s, dir, horizon).writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      horizon: String = "1 hour"): DataFrame =
+    withRocksDB(s) {
+      drainToFiles(s, boundedDedupStream(s, dir, horizon), outDir,
+        checkpointDir)
     }
-    s.read.parquet(outDir)
-  }
 
   private def boundedDedupStream(s: SparkSession, dir: String,
       horizon: String): DataFrame = {
@@ -274,30 +262,16 @@ object StreamOps {
   }
 
   /** Scale variant of [[streamingDedup]]: append mode into a parquet FILE
-    * sink, on the RocksDB state store by default (see [[RocksDBProvider]]).
+    * sink, on the RocksDB state store (see [[RocksDBProvider]]).
     * The seen-hash state is the scale hazard here — one entry per DISTINCT
     * content hash, forever (NoTimeout) — which is exactly the shape that
     * outgrows executor heap on the default provider at 100 TB. */
   def streamingDedupToFiles(s: SparkSession, dir: String, outDir: String,
-      checkpointDir: String, rocksDB: Boolean = true): DataFrame = {
-    withRocksDB(s, rocksDB) {
-      val q = dedupStream(s, dir).writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      checkpointDir: String): DataFrame =
+    withRocksDB(s) {
+      drainToFiles(s, dedupStream(s, dir), outDir, checkpointDir)
     }
-    s.read.parquet(outDir)
-  }
 
-  /** The stateful dedup stream shared by both sinks: file source →
-    * md5(text) → seen-flag per hash via `flatMapGroupsWithState`.
-    * Package-visible so the crash-resume spec can drive the REAL operator
-    * pipeline under a test-controlled query lifecycle (kill + restart on
-    * one checkpoint). */
   /** Streaming twin of the prep pipeline's quality + privacy front:
     * gate every arriving document with the one-pass
     * [[graft.operators.TextAnalysis.qualityPasses]] kernel and emit
@@ -309,14 +283,8 @@ object StreamOps {
     */
   def streamingQualityPrep(s: SparkSession, dir: String): DataFrame =
     drainMemorySink(s, "stream_quality", "append") {
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("text", StringType),
-        StructField("lang", StringType),
-        StructField("source", StringType),
-        StructField("n_chars", LongType)))
       graft.operators.TextAnalysis.gateByQuality(
-          streamSource(s, dir, "documents", docSchema))
+          streamSource(s, dir, "documents", DocSchema))
         .select(col("doc_id"), col("lang"),
           length(graft.operators.TextAnalysis.redactedText(col("text")))
             .cast("long").as("n_chars_redacted"))
@@ -335,14 +303,8 @@ object StreamOps {
     drainMemorySink(s, "stream_prep", "append") {
       import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
       import s.implicits._
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("text", StringType),
-        StructField("lang", StringType),
-        StructField("source", StringType),
-        StructField("n_chars", LongType)))
       graft.operators.TextAnalysis.gateByQuality(
-          streamSource(s, dir, "documents", docSchema))
+          streamSource(s, dir, "documents", DocSchema))
         .select(col("doc_id"),
           org.apache.spark.sql.functions.md5(
             graft.operators.TextAnalysis.redactedText(col("text")))
@@ -362,16 +324,15 @@ object StreamOps {
         .toDF("h", "keep_id")
     }
 
+  /** The stateful dedup stream shared by both sinks: file source →
+    * md5(text) → seen-flag per hash via `flatMapGroupsWithState`.
+    * Package-visible so the crash-resume spec can drive the REAL operator
+    * pipeline under a test-controlled query lifecycle (kill + restart on
+    * one checkpoint). */
   private[streaming] def dedupStream(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import s.implicits._
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    streamSource(s, dir, "documents", docSchema)
+    streamSource(s, dir, "documents", DocSchema)
       .select(col("doc_id"),
         org.apache.spark.sql.functions.md5(col("text")).as("h"))
       .as[(Long, String)]
@@ -419,32 +380,11 @@ object StreamOps {
     * instead of the r16 full-scan + re-distinct of `sigDir` — per-batch
     * cost tracks the batch, not the corpus-ever-seen.
     *
-    * Exactly-once landing: every per-batch output — survivors, the
-    * band-store append, the signature append — is a `batch=<batchId>`
-    * directory committed by write-to-temp + ATOMIC_MOVE, skipped when
-    * the target already exists. A `foreachBatch` retry therefore cannot
-    * double-append (at-least-once replay collapses to exactly-once
-    * effects; pinned by StreamingDedupSpec's forced-replay test).
-    * Commit ORDER is survivors → bands → signatures: survivors are
-    * recomputable only while the batch's own bands are NOT yet landed,
-    * so they commit first; a retry that finds them committed skips
-    * straight to landing state.
-    *
-    * INLINE STATE MAINTENANCE (round 19): `maintainAtBatches ≥ 2` runs
-    * the band store's maintenance pass (expire past `retainBatches`,
-    * compact past the fragmentation threshold) INSIDE the loop after
-    * each batch lands — a minutes-cadence stream fragments by hundreds
-    * of `batch=` dirs before the background workers' 24 h sweep would
-    * ever fire, so the stream that creates the fragmentation pays for
-    * its own cleanup: one cheap directory count per batch, one merge
-    * per threshold crossing, dir count bounded by `maintainAtBatches+1`
-    * forever. Exactly-once survives because maintenance is idempotent
-    * by construction — compaction is commit-then-delete and changes
-    * MEMBERSHIP not content, so a replay whose `batch=<id>` dir was
-    * folded away recomputes against the compacted store, finds its
-    * survivors already committed (skip), and its re-append lands an
-    * empty dir (its bands are all landed) — effects unchanged. Default
-    * 0 keeps maintenance with the scheduled workers. */
+    * Exactly-once landing and inline maintenance follow
+    * [[runStoreStream]]'s replay contract. Commit ORDER is survivors →
+    * bands → signatures: survivors are recomputable only while the
+    * batch's own bands are NOT yet landed, so they commit first; a
+    * retry that finds them committed skips straight to landing state. */
   def incrementalMinhashToFiles(s: SparkSession, dir: String,
       knownSigs: DataFrame, sigDir: String, outDir: String,
       checkpointDir: String,
@@ -452,55 +392,27 @@ object StreamOps {
       maxFilesPerTrigger: Option[Int] = None,
       maintainAtBatches: Int = 0,
       retainBatches: Option[Int] = None): DataFrame = {
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
     atomicBatchWrite(knownSigs, sigDir, "init")
     val store = graft.operators.BatchStore.fromSignatures(
       s, s"$sigDir/_bands", s.read.parquet(s"$sigDir/batch=init"))
-    val q = streamSource(s, dir, "documents", docSchema,
-        maxFilesPerTrigger
-          .map(n => Map("maxFilesPerTrigger" -> n.toString))
-          .getOrElse(Map.empty))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val tag = batchId.toString
-        val fullReplay = batchExists(outDir, tag) &&
-          store.hasBatch(tag) && batchExists(sigDir, tag)
-        if (!fullReplay) {
-          val docs = transform(batch.select(col("doc_id"), col("text")))
-          // ONE signature-kernel pass per batch (r21): the dedup and
-          // the all-seen signature landing share the materialized frame
-          val sigs = graft.operators.Dedup.minhashSignatures(docs,
-            8, graft.operators.Dedup.DefaultSeeds).localCheckpoint(true)
-          val (survivors, newBands) = graft.operators.Dedup
-            .incrementalMinhashFromSigs(sigs, store)
-          atomicBatchWrite(survivors, outDir, tag)
-          store.append(newBands, tag)
-          atomicBatchWrite(sigs, sigDir, tag)
-        }
-        if (maintainAtBatches >= 2)
-          store.maintenanceTask(maintainAtBatches, retainBatches)()
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    // explicit schema: a run whose every batch dedups to ZERO
-    // survivors leaves only data-less batch= dirs, which would wedge
-    // schema inference (the BatchStore.read precedent)
     val sigFields = StructField("doc_id", LongType) +:
       graft.operators.Dedup.DefaultSeeds.indices.map(i =>
         StructField(s"m${i + 1}", LongType))
-    s.read
-      .schema(StructType(sigFields :+ StructField("batch", StringType)))
-      .parquet(outDir)
-      .drop("batch")
+    runStoreStream(s, dir, "documents", DocSchema, maxFilesPerTrigger,
+        checkpointDir, outDir, sigFields, "minhash", Seq("bands" -> store),
+        maintainAtBatches, retainBatches,
+        replayDirs = Seq(sigDir)) { (batch, tag) =>
+      val docs = transform(batch.select(col("doc_id"), col("text")))
+      // ONE signature-kernel pass per batch (r21): the dedup and
+      // the all-seen signature landing share the materialized frame
+      val sigs = graft.operators.Dedup.minhashSignatures(docs,
+        8, graft.operators.Dedup.DefaultSeeds).localCheckpoint(true)
+      val (survivors, newBands) = graft.operators.Dedup
+        .incrementalMinhashFromSigs(sigs, store)
+      atomicBatchWrite(survivors, outDir, tag)
+      store.append(newBands, tag)
+      atomicBatchWrite(sigs, sigDir, tag)
+    }
   }
 
   /** CONTINUOUS-CURATION semantic dedup — the streaming twin of
@@ -514,23 +426,18 @@ object StreamOps {
     * the restart path), so per-batch work touches only the batch's own
     * `(c1, c2)` buckets — never the corpus.
     *
-    * Exactly-once landing, the [[incrementalMinhashToFiles]] contract
-    * verbatim: survivors commit first (`batch=<batchId>` temp +
-    * ATOMIC_MOVE — recomputable only while the batch's own members are
-    * NOT yet landed), the member append after; a `foreachBatch` retry
-    * that finds both committed skips entirely, one that finds only
-    * survivors lands just the state. The landing is ALL-SEEN (the full
-    * member set, survivors and dropped — semantic distance is not
-    * transitive), which is what makes id-ordered micro-batches compose
-    * to the one-shot batch operator (StreamingDedupSpec differential).
+    * Survivors commit before the member append ([[runStoreStream]]'s
+    * replay contract). The landing is ALL-SEEN (the full member set,
+    * survivors and dropped — semantic distance is not transitive),
+    * which is what makes id-ordered micro-batches compose to the
+    * one-shot batch operator (StreamingDedupSpec differential).
     *
     * `transform` lets the harness plant fixtures / select the batch
     * slice per micro-batch; production passes identity.
     *
     * `maintainAtBatches` / `retainBatches`: inline per-batch store
-    * maintenance, the [[incrementalMinhashToFiles]] contract verbatim
-    * (the `batch=init` seed is retention-protected by the store
-    * default, so a tight horizon never drops the landed corpus).
+    * maintenance (the `batch=init` seed is retention-protected by the
+    * store default, so a tight horizon never drops the landed corpus).
     *
     * `layoutDir` may be a VERSIONED [[graft.operators.IvfVersions]]
     * root (round 20 — [[resolveLayout]]): the pointer is re-read per
@@ -566,46 +473,23 @@ object StreamOps {
             resolveLayout(layoutDir), store, dist2Threshold)
         store.append(initMembers, "init")
       }
-    val q = streamSource(s, dir, "embeddings", embSchema,
-        maxFilesPerTrigger
-          .map(n => Map("maxFilesPerTrigger" -> n.toString))
-          .getOrElse(Map.empty))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val tag = batchId.toString
-        val fullReplay = batchExists(outDir, tag) && store.hasBatch(tag)
-        if (!fullReplay)
-          // read lock across resolve → assign → append: a concurrent
-          // retrain's re-key (write lock) lands before or after the
-          // whole batch, never between key derivation and landing
-          graft.operators.StoreState.withRead(storeDir) {
-            val emb = transform(
-              batch.select(col("vec_id"), col("embedding")))
-            val (survivors, members) = graft.operators.Clustering
-              .incrementalSemanticWithStore(emb, resolveLayout(layoutDir),
-                store, dist2Threshold)
-            atomicBatchWrite(survivors, outDir, tag)
-            store.append(members, tag)
-          }
-        if (maintainAtBatches >= 2)
-          store.maintenanceTask(maintainAtBatches, retainBatches)()
-        afterBatch(batchId)
-        ()
+    runStoreStream(s, dir, "embeddings", embSchema, maxFilesPerTrigger,
+        checkpointDir, outDir,
+        Seq(StructField("vec_id", LongType), StructField("cid", LongType)),
+        "semantic", Seq("members" -> store), maintainAtBatches,
+        retainBatches, afterBatch) { (batch, tag) =>
+      // read lock across resolve → assign → append: a concurrent
+      // retrain's re-key (write lock) lands before or after the
+      // whole batch, never between key derivation and landing
+      graft.operators.StoreState.withRead(storeDir) {
+        val emb = transform(batch.select(col("vec_id"), col("embedding")))
+        val (survivors, members) = graft.operators.Clustering
+          .incrementalSemanticWithStore(emb, resolveLayout(layoutDir),
+            store, dist2Threshold)
+        atomicBatchWrite(survivors, outDir, tag)
+        store.append(members, tag)
       }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    // explicit schema: an all-duplicate run leaves only data-less
-    // batch= dirs that would wedge inference (the BatchStore precedent)
-    s.read
-      .schema(StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("cid", LongType),
-        StructField("batch", StringType))))
-      .parquet(outDir)
-      .drop("batch")
+    }
   }
 
   /** CONTINUOUS-CRAWL perceptual image dedup — the streaming twin of
@@ -615,11 +499,10 @@ object StreamOps {
     * exactly-once streaming). Per micro-batch the document payloads
     * are profile-dHashed and near-dup-filtered against the landed
     * hash-carrying [[graft.operators.BatchStore.Vectors]] store; survivors
-    * commit first (`batch=<id>` temp + ATOMIC_MOVE), the ALL-SEEN
-    * member set lands after — the [[incrementalMinhashToFiles]]
-    * replay contract verbatim, with the store lookup excluding the
-    * batch's own tag (the composed-replay primitive; here it also
-    * makes the single-store partial replay exact rather than
+    * commit first, the ALL-SEEN member set lands after
+    * ([[runStoreStream]]'s replay contract), with the store lookup
+    * excluding the batch's own tag (the composed-replay primitive; here
+    * it also makes the single-store partial replay exact rather than
     * merely effect-idempotent). The store is seeded once from
     * `landedPayloads` as `batch=init` (skipped when landed — the
     * restart path; retention-protected by the store default). */
@@ -630,12 +513,6 @@ object StreamOps {
       maxFilesPerTrigger: Option[Int] = None,
       maintainAtBatches: Int = 0,
       retainBatches: Option[Int] = None): DataFrame = {
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
     val store = graft.operators.BatchStore.open(s, storeDir,
       graft.operators.BatchStore.Vectors)
     if (!store.hasBatch("init")) {
@@ -643,41 +520,19 @@ object StreamOps {
         .incrementalImageDedupWithStore(landedPayloads, store, maxHamming)
       store.append(init, "init")
     }
-    val q = streamSource(s, dir, "documents", docSchema,
-        maxFilesPerTrigger
-          .map(n => Map("maxFilesPerTrigger" -> n.toString))
-          .getOrElse(Map.empty))
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val tag = batchId.toString
-        val fullReplay = batchExists(outDir, tag) && store.hasBatch(tag)
-        if (!fullReplay) {
-          val payloads = transform(batch.select(col("doc_id"),
-            encode(col("text"), "utf-8").as("payload")))
-          val (survivors, members) = graft.operators.Multimodal
-            .incrementalImageDedupWithStore(payloads, store, maxHamming,
-              excludeTag = Some(tag))
-          atomicBatchWrite(survivors, outDir, tag)
-          store.append(members, tag)
-        }
-        if (maintainAtBatches >= 2)
-          store.maintenanceTask(maintainAtBatches, retainBatches)()
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    // explicit schema: an all-duplicate run leaves only data-less
-    // batch= dirs that would wedge inference (the BatchStore precedent)
-    s.read
-      .schema(StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("phash", LongType),
-        StructField("batch", StringType))))
-      .parquet(outDir)
-      .drop("batch")
+    runStoreStream(s, dir, "documents", DocSchema, maxFilesPerTrigger,
+        checkpointDir, outDir,
+        Seq(StructField("doc_id", LongType), StructField("phash", LongType)),
+        "image", Seq("members" -> store), maintainAtBatches,
+        retainBatches) { (batch, tag) =>
+      val payloads = transform(batch.select(col("doc_id"),
+        encode(col("text"), "utf-8").as("payload")))
+      val (survivors, members) = graft.operators.Multimodal
+        .incrementalImageDedupWithStore(payloads, store, maxHamming,
+          excludeTag = Some(tag))
+      atomicBatchWrite(survivors, outDir, tag)
+      store.append(members, tag)
+    }
   }
 
   /** CONTINUOUS CURATION end-to-end (round 19 — the full pipeline a
@@ -757,12 +612,6 @@ object StreamOps {
       retainBatches: Option[Int] = None,
       afterBatch: Long => Unit = _ => ()): DataFrame = {
     import graft.operators.{BatchStore, Clustering, Corpus, Dedup, TextAnalysis}
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
     val exact = BatchStore.open(s, s"$stateDir/exact", BatchStore.Bands)
     val bandSt = BatchStore.open(s, s"$stateDir/bands", BatchStore.Bands)
     val vecSt = BatchStore.open(s, s"$stateDir/vecs", BatchStore.Vectors)
@@ -772,128 +621,174 @@ object StreamOps {
     val emb =
       if (isPureFileFrame(embeddings)) embProj
       else embProj.localCheckpoint(true)
-    val q = streamSource(s, dir, "documents", docSchema,
+    val curated = runStoreStream(s, dir, "documents", DocSchema,
+        maxFilesPerTrigger, checkpointDir, outDir,
+        Seq(StructField("doc_id", LongType), StructField("lang", StringType),
+          StructField("n_tokens", LongType)),
+        "curate", Seq("hashes" -> exact, "bands" -> bandSt, "members" -> vecSt),
+        maintainAtBatches, retainBatches, afterBatch) { (batch, tag) =>
+      val t = Some(tag)
+      val raw = transform(
+        batch.select(col("doc_id"), col("text"), col("lang")))
+      // each stage frame is MATERIALIZED once (eager batch-sized
+      // localCheckpoints — the incrementalSemanticWithStore members
+      // discipline): the composed body takes ~6 actions (store
+      // lookups, three appends, the survivor write), and without
+      // the checkpoints every one re-runs the gate + redaction
+      // kernels over the raw batch
+      val red = labeled(s, s"curate[$tag]: gate+redact") {
+        TextAnalysis.gateByQuality(raw)
+          .select(col("doc_id"), col("lang"),
+            TextAnalysis.redactedText(col("text")).as("text"))
+          .localCheckpoint(true)
+      }
+      val (s1, newHashes) = labeled(s, s"curate[$tag]: exact lookup") {
+        Dedup.incrementalExactWithStore(red, exact, excludeTag = t)
+      }
+      val s1docs = labeled(s, s"curate[$tag]: exact survivors") {
+        red.join(s1.select("doc_id"),
+          Seq("doc_id"), "left_semi").localCheckpoint(true)
+      }
+      val (s2sigs, newBands) =
+        labeled(s, s"curate[$tag]: minhash lookup") {
+          Dedup.incrementalMinhashWithStore(
+            s1docs, bandSt, excludeTag = t)
+        }
+      val s2docs = labeled(s, s"curate[$tag]: minhash survivors") {
+        s1docs.join(s2sigs.select("doc_id"),
+          Seq("doc_id"), "left_semi").localCheckpoint(true)
+      }
+      val emb2 = emb.join(
+        s2docs.select(col("doc_id").as("vec_id")),
+        Seq("vec_id"), "left_semi")
+      // read lock across resolve → assign → appends: a concurrent
+      // retrain's re-key (write lock) lands before or after the
+      // whole semantic stage, never between key derivation and
+      // member landing (resolveLayout doc)
+      graft.operators.StoreState.withRead(vecSt.dir) {
+        val (s3, members) =
+          labeled(s, s"curate[$tag]: semantic lookup") {
+            Clustering.incrementalSemanticWithStore(
+              emb2, resolveLayout(layoutDir), vecSt, dist2Threshold,
+              excludeTag = t)
+          }
+        val out = s2docs.join(
+            s3.select(col("vec_id").as("doc_id")),
+            Seq("doc_id"), "left_semi")
+          .select(col("doc_id"), col("lang"),
+            graft.functions.SplitCount(col("text"), bySpaceOnly = true)
+              .as("n_tokens"))
+        labeled(s, s"curate[$tag]: commit survivors") {
+          atomicBatchWrite(out, outDir, tag)
+        }
+        // the three appends are INDEPENDENT jobs on three store dirs
+        // (order among them never mattered — replay requires all
+        // three, any committed subset after a crash is tolerated
+        // exactly as under the old sequential order), so overlap
+        // them (guide §2.6): wall cost = the slowest append, not
+        // the sum. The members append stays on THIS thread — it
+        // must run under the batch's already-held vecSt read lock
+        // (a helper thread re-acquiring it could deadlock behind a
+        // queued writer); the other two stores' locks are not held
+        // here, so their appends take them fresh on pool threads.
+        overlapped(s,
+          Seq(s"curate[$tag]: append hashes" ->
+              (() => { exact.append(newHashes, tag); () }),
+            s"curate[$tag]: append bands" ->
+              (() => { bandSt.append(newBands, tag); () }))) {
+          labeled(s, s"curate[$tag]: append members") {
+            vecSt.append(members, tag)
+          }
+        }
+      }
+    }
+    Corpus.packSequences(curated, "doc_id", "n_tokens", budgetTokens, shards)
+      .select(col("doc_id"), col("shard"), col("bin"), col("n_tokens"))
+  }
+
+  /** The ONE lifecycle of the store-backed incremental dedup streams
+    * ([[incrementalMinhashToFiles]], [[incrementalSemanticToFiles]],
+    * [[incrementalImageToFiles]], [[curateToFiles]]): the `table` file
+    * source under `dir` (at most `maxFilesPerTrigger` files per
+    * micro-batch) drains through `foreachBatch`, where `body(batch,
+    * tag)` dedups the batch against the landed `stores` and lands its
+    * survivors in `outDir` and its state in the stores.
+    *
+    * Exactly-once landing: every per-batch output — the survivors, each
+    * store append, each `replayDirs` landing — is a `batch=<batchId>`
+    * directory committed by write-to-temp + ATOMIC_MOVE, skipped when
+    * the target already exists. A `foreachBatch` retry therefore cannot
+    * double-append (at-least-once replay collapses to exactly-once
+    * effects; pinned by StreamingDedupSpec's forced-replay test).
+    * Bodies commit survivors FIRST, then the store appends: survivors
+    * are recomputable only while the batch's own state is NOT yet
+    * landed. A retry that finds every output committed skips `body`
+    * entirely; one that finds only some re-runs it, and the committed
+    * outputs skip.
+    *
+    * INLINE STATE MAINTENANCE (round 19): `maintainAtBatches ≥ 2` runs
+    * each store's maintenance pass (expire past `retainBatches`,
+    * compact past the fragmentation threshold) INSIDE the loop after
+    * each batch lands — a minutes-cadence stream fragments by hundreds
+    * of `batch=` dirs before the background workers' 24 h sweep would
+    * ever fire, so the stream that creates the fragmentation pays for
+    * its own cleanup: one cheap directory count per batch, one merge
+    * per threshold crossing, dir count bounded by `maintainAtBatches+1`
+    * forever. Exactly-once survives because maintenance is idempotent
+    * by construction — compaction is commit-then-delete and changes
+    * MEMBERSHIP not content, so a replay whose `batch=<id>` dir was
+    * folded away recomputes against the compacted store, finds its
+    * survivors already committed (skip), and its re-append lands an
+    * empty dir (its bands are all landed) — effects unchanged. Default
+    * 0 keeps maintenance with the scheduled workers. The stores are
+    * independent dirs and no lock is held here, so every store but the
+    * last sweeps on a helper thread ([[overlapped]]; each takes only
+    * its own store's write lock) and the last on the calling thread;
+    * each sweep's jobs carry the `<name>[<tag>]: maintenance <store>`
+    * label.
+    *
+    * `afterBatch(batchId)` runs after every batch's commits and
+    * maintenance, outside the store locks. The result re-reads `outDir`
+    * with the explicit `outFields` schema: a run whose every batch
+    * dedups to ZERO survivors leaves only data-less `batch=` dirs,
+    * which would wedge schema inference (the BatchStore.read
+    * precedent). */
+  private def runStoreStream(s: SparkSession, dir: String, table: String,
+      schema: StructType, maxFilesPerTrigger: Option[Int],
+      checkpointDir: String, outDir: String, outFields: Seq[StructField],
+      name: String, stores: Seq[(String, graft.operators.BatchStore)],
+      maintainAtBatches: Int, retainBatches: Option[Int],
+      afterBatch: Long => Unit = _ => (), replayDirs: Seq[String] = Nil)(
+      body: (DataFrame, String) => Unit): DataFrame = {
+    val q = streamSource(s, dir, table, schema,
         maxFilesPerTrigger
           .map(n => Map("maxFilesPerTrigger" -> n.toString))
           .getOrElse(Map.empty))
       .writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val tag = batchId.toString
-        val t = Some(tag)
-        val fullReplay = batchExists(outDir, tag) &&
-          exact.hasBatch(tag) && bandSt.hasBatch(tag) &&
-          vecSt.hasBatch(tag)
-        if (!fullReplay) {
-          val raw = transform(
-            batch.select(col("doc_id"), col("text"), col("lang")))
-          // each stage frame is MATERIALIZED once (eager batch-sized
-          // localCheckpoints — the incrementalSemanticWithStore members
-          // discipline): the composed body takes ~6 actions (store
-          // lookups, three appends, the survivor write), and without
-          // the checkpoints every one re-runs the gate + redaction
-          // kernels over the raw batch
-          val red = labeled(s, s"curate[$tag]: gate+redact") {
-            TextAnalysis.gateByQuality(raw)
-              .select(col("doc_id"), col("lang"),
-                TextAnalysis.redactedText(col("text")).as("text"))
-              .localCheckpoint(true)
+        val fullReplay =
+          (outDir +: replayDirs).forall(batchExists(_, tag)) &&
+            stores.forall(_._2.hasBatch(tag))
+        if (!fullReplay) body(batch, tag)
+        if (maintainAtBatches >= 2) {
+          val sweeps = stores.map { case (storeName, store) =>
+            s"$name[$tag]: maintenance $storeName" ->
+              store.maintenanceTask(maintainAtBatches, retainBatches)
           }
-          val (s1, newHashes) = labeled(s, s"curate[$tag]: exact lookup") {
-            Dedup.incrementalExactWithStore(red, exact, excludeTag = t)
-          }
-          val s1docs = labeled(s, s"curate[$tag]: exact survivors") {
-            red.join(s1.select("doc_id"),
-              Seq("doc_id"), "left_semi").localCheckpoint(true)
-          }
-          val (s2sigs, newBands) =
-            labeled(s, s"curate[$tag]: minhash lookup") {
-              Dedup.incrementalMinhashWithStore(
-                s1docs, bandSt, excludeTag = t)
-            }
-          val s2docs = labeled(s, s"curate[$tag]: minhash survivors") {
-            s1docs.join(s2sigs.select("doc_id"),
-              Seq("doc_id"), "left_semi").localCheckpoint(true)
-          }
-          val emb2 = emb.join(
-            s2docs.select(col("doc_id").as("vec_id")),
-            Seq("vec_id"), "left_semi")
-          // read lock across resolve → assign → appends: a concurrent
-          // retrain's re-key (write lock) lands before or after the
-          // whole semantic stage, never between key derivation and
-          // member landing (resolveLayout doc)
-          graft.operators.StoreState.withRead(vecSt.dir) {
-            val (s3, members) =
-              labeled(s, s"curate[$tag]: semantic lookup") {
-                Clustering.incrementalSemanticWithStore(
-                  emb2, resolveLayout(layoutDir), vecSt, dist2Threshold,
-                  excludeTag = t)
-              }
-            val out = s2docs.join(
-                s3.select(col("vec_id").as("doc_id")),
-                Seq("doc_id"), "left_semi")
-              .select(col("doc_id"), col("lang"),
-                graft.functions.SplitCount(col("text"), bySpaceOnly = true)
-                  .as("n_tokens"))
-            labeled(s, s"curate[$tag]: commit survivors") {
-              atomicBatchWrite(out, outDir, tag)
-            }
-            // the three appends are INDEPENDENT jobs on three store dirs
-            // (order among them never mattered — replay requires all
-            // three, any committed subset after a crash is tolerated
-            // exactly as under the old sequential order), so overlap
-            // them (guide §2.6): wall cost = the slowest append, not
-            // the sum. The members append stays on THIS thread — it
-            // must run under the batch's already-held vecSt read lock
-            // (a helper thread re-acquiring it could deadlock behind a
-            // queued writer); the other two stores' locks are not held
-            // here, so their appends take them fresh on pool threads.
-            overlapped(s,
-              Seq(s"curate[$tag]: append hashes" ->
-                  (() => { exact.append(newHashes, tag); () }),
-                s"curate[$tag]: append bands" ->
-                  (() => { bandSt.append(newBands, tag); () }))) {
-              labeled(s, s"curate[$tag]: append members") {
-                vecSt.append(members, tag)
-              }
-            }
-          }
+          val (lastDesc, lastSweep) = sweeps.last
+          overlapped(s, sweeps.init)(labeled(s, lastDesc)(lastSweep()))
         }
-        // three independent store dirs, no lock held at this point —
-        // overlap the sweeps the same way (each takes only its own
-        // store's write lock on its own thread)
-        if (maintainAtBatches >= 2)
-          overlapped(s,
-            Seq(s"curate[$tag]: maintenance hashes" ->
-                (() => exact.maintenanceTask(
-                  maintainAtBatches, retainBatches)()),
-              s"curate[$tag]: maintenance bands" ->
-                (() => bandSt.maintenanceTask(
-                  maintainAtBatches, retainBatches)()))) {
-            labeled(s, s"curate[$tag]: maintenance members") {
-              vecSt.maintenanceTask(maintainAtBatches, retainBatches)()
-            }
-          }
         afterBatch(batchId)
-        ()
       }
       .start()
     try q.processAllAvailable()
     finally q.stop()
-    // explicit schema: an all-duplicate run leaves only data-less
-    // batch= dirs that would wedge inference (the BatchStore precedent)
-    val curated = s.read
-      .schema(StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("lang", StringType),
-        StructField("n_tokens", LongType),
-        StructField("batch", StringType))))
+    s.read
+      .schema(StructType(outFields :+ StructField("batch", StringType)))
       .parquet(outDir)
       .drop("batch")
-    graft.operators.Corpus.packSequences(
-        curated, "doc_id", "n_tokens", budgetTokens, shards)
-      .select(col("doc_id"), col("shard"), col("bin"), col("n_tokens"))
   }
 
   private def batchExists(baseDir: String, tag: String): Boolean =
@@ -1019,16 +914,7 @@ object StreamOps {
       true
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false
-    } finally {
-      if (Files.exists(tmp)) {
-        val w = Files.walk(tmp)
-        try {
-          import scala.jdk.CollectionConverters._
-          w.iterator().asScala.toSeq.reverse
-            .foreach(Files.deleteIfExists(_))
-        } finally w.close()
-      }
-    }
+    } finally graft.core.PathIO.deleteRecursively(tmp)
   }
 
   /** Open session carried across micro-batches per user. */
@@ -1085,25 +971,15 @@ object StreamOps {
     * does). Same append semantics: sessions the watermark has not yet
     * closed remain in state, unemitted.
     *
-    * Runs on the RocksDB state store by default (see [[RocksDBProvider]]):
+    * Runs on the RocksDB state store (see [[RocksDBProvider]]):
     * per-user session state lives on executor-local disk, so distinct-user
     * cardinality scales with disk, not heap. */
   def streamingSessionizeToFiles(s: SparkSession, dir: String,
       outDir: String, checkpointDir: String,
-      gapNs: Long = 30L * 60 * 1000000000L,
-      rocksDB: Boolean = true): DataFrame = {
-    withRocksDB(s, rocksDB) {
-      val q = sessionStream(s, dir, gapNs).writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      gapNs: Long = 30L * 60 * 1000000000L): DataFrame =
+    withRocksDB(s) {
+      drainToFiles(s, sessionStream(s, dir, gapNs), outDir, checkpointDir)
     }
-    s.read.parquet(outDir)
-  }
 
   /** The per-user session fold driven by `flatMapGroupsWithState`: events
     * of one user in one micro-batch arrive unordered (sorted here with the
@@ -1351,20 +1227,11 @@ object StreamOps {
   /** [[attributionJoinStreamSalted]] in its scale shape: RocksDB state,
     * exactly-once parquet sink — the file twin ScaleSmoke times. */
   def attributionJoinSaltedToFiles(s: SparkSession, dir: String,
-      outDir: String, checkpointDir: String,
-      rocksDB: Boolean = true): DataFrame = {
-    withRocksDB(s, rocksDB) {
-      val q = attributionJoinStreamSalted(s, dir).writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      outDir: String, checkpointDir: String): DataFrame =
+    withRocksDB(s) {
+      drainToFiles(s, attributionJoinStreamSalted(s, dir), outDir,
+        checkpointDir)
     }
-    s.read.parquet(outDir)
-  }
 
   /** LEFT-OUTER attribution: matched pairs as [[attributionJoin]], plus
     * one null-click row per UNATTRIBUTED purchase — emitted only once
@@ -1429,20 +1296,11 @@ object StreamOps {
     * sides) spills to executor-local disk, emitted pairs land
     * exactly-once via the sink's commit log. */
   def attributionJoinToFiles(s: SparkSession, dir: String, outDir: String,
-      checkpointDir: String, rocksDB: Boolean = true,
-      joinType: String = "inner"): DataFrame = {
-    withRocksDB(s, rocksDB) {
-      val q = attributionJoinStream(s, dir, joinType).writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      checkpointDir: String, joinType: String = "inner"): DataFrame =
+    withRocksDB(s) {
+      drainToFiles(s, attributionJoinStream(s, dir, joinType), outDir,
+        checkpointDir)
     }
-    s.read.parquet(outDir)
-  }
 
   /** State for [[asOfFold]]: the single compressed prior-click summary
     * (the newest click the watermark has sealed) plus the
@@ -1556,19 +1414,10 @@ object StreamOps {
   /** [[asOfJoinStream]] in its scale shape: RocksDB state store,
     * exactly-once parquet sink. */
   def streamingAsOfToFiles(s: SparkSession, dir: String, outDir: String,
-      checkpointDir: String, rocksDB: Boolean = true): DataFrame = {
-    withRocksDB(s, rocksDB) {
-      val q = asOfJoinStream(s, dir).writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", outDir)
-        .option("checkpointLocation", checkpointDir)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      checkpointDir: String): DataFrame =
+    withRocksDB(s) {
+      drainToFiles(s, asOfJoinStream(s, dir), outDir, checkpointDir)
     }
-    s.read.parquet(outDir)
-  }
 
   /** Continuous ingest INTO a wide-column table: the events stream as
     * cells, driven through `foreachBatch` into

@@ -70,6 +70,15 @@ class QueryContractSpec extends SparkSuite {
       assert(docs(n).dataType == t, s"documents.$n drifted: ${docs(n).dataType}")
   }
 
+  test("orderCellsEntries: a keep predicate that rejects every order " +
+      "cell fails fast with a message naming it") {
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.orderCellsEntries(spark, Dir, (_, _) => false)
+    }
+    assert(e.getMessage.contains(
+      "the keep predicate rejects every order cell"), e.getMessage)
+  }
+
   test("queries and oracle SQL stay in bijection") {
     // repo convention: every registered query carries a DuckDB oracle.
     // A deliberately rows-only query (driver allows them, weaker check)

@@ -54,8 +54,7 @@ class StreamingKmvSpec extends SparkSuite {
         StreamOps.RocksDBProvider)
       try {
         def startQuery() =
-          StreamOps.dailyKmvDistinctUsersToFiles(spark, s"$tmp/in",
-            out, ck, rocksDB = false) // provider already set session-wide
+          StreamOps.dailyKmvDistinctUsersToFiles(spark, s"$tmp/in", out, ck)
         // run 1: 40 users land in window W0 (partial sketch buffered),
         // nothing finalized yet (watermark still below W0+1day+1h)
         writeBatch("b0", (1L to 40L).map(u => (u, W0 + u * 1000000L, u)))
